@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.meta.MetaJson.quote
 
 /** ANN-index refresh-vs-rebuild probe (dev tool): times, in ONE JVM and
   * per rep, (a) a full index build over the whole embeddings fixture,
@@ -30,15 +31,7 @@ object AnnProbe {
     val sfDir = args(0)
     val reps = if (args.length > 1) args(1).toInt else 3
     val mode = if (args.length > 2) args(2) else "refresh"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-annprobe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.run.GraftSession.fromEnv()
     import graft.operators.Similarity
 
     val emb = sources.Tables.load(spark, sfDir, "embeddings")
@@ -68,7 +61,7 @@ object AnnProbe {
     }
 
     val out = new StringBuilder
-    out.append(s"""{"probe":"ann","sf_dir":"$sfDir","n_vectors":$nAll""")
+    out.append(s"""{"probe":"ann","sf_dir":${quote(sfDir)},"n_vectors":$nAll""")
     // the WHOLE rep loop rides inside try/finally: a visibility require
     // or Spark failure mid-loop must not leak the multi-index temp dir
     // (the IvmProbe staging lesson)
@@ -129,7 +122,7 @@ object AnnProbe {
         (System.nanoTime() - t0) / 1e9
       }.min
     val out = new StringBuilder
-    out.append(s"""{"probe":"ann_delta","sf_dir":"$sfDir","n_probes":${probes.size}""")
+    out.append(s"""{"probe":"ann_delta","sf_dir":${quote(sfDir)},"n_probes":${probes.size}""")
     // LSH
     Similarity.buildLshIndex(base, "vec_id", "embedding", s"$root/lsh", dim = 64)
     (0 until 7).foreach(i => Similarity.refreshLshIndex(

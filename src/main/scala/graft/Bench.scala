@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.meta.MetaJson.quote
 
 object Bench {
 
@@ -15,11 +16,11 @@ object Bench {
     * the total. Warm-stage tracking: the first query touching a shared
     * persisted stage (Queries.sharedStages) pays its materialization,
     * later ones ride the cache — the flag makes per-query numbers
-    * interpretable. */
-  /** Returns per-query results plus the separately-charged one-off index
-    * build times (stage name -> seconds). Builds run before the first
-    * consuming query, so indexed-probe timings are steady-state cost —
-    * the 100 TB reading of an index: amortized build, per-probe pruning. */
+    * interpretable. Returns per-query results plus the separately-charged
+    * one-off index build times (stage name -> seconds). Builds run before
+    * the first consuming query, so indexed-probe timings are steady-state
+    * cost — the 100 TB reading of an index: amortized build, per-probe
+    * pruning. */
   def runQueries(spark: SparkSession, sfDir: String,
       queries: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)])
       : (Seq[QueryResult], Seq[(String, Double)]) = {
@@ -40,12 +41,15 @@ object Bench {
         }
       val warm = stages.nonEmpty && stages.forall(stagesSeen.contains)
       val t0 = System.nanoTime()
+      // the timed jobs (never the builds above) carry the query name as
+      // their job group, so a stage listener can attribute them
+      spark.sparkContext.setJobGroup(name, name)
       val err = try {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         None
       } catch { case e: Throwable =>
         Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(300))
-      }
+      } finally spark.sparkContext.clearJobGroup()
       // a FAILED stage-paying query did not materialize the shared
       // stage — marking it seen would mislabel later consumers warm
       // while they pay the cold build
@@ -55,12 +59,16 @@ object Bench {
     (results, buildTimes.toSeq)
   }
 
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  /** JIT/codegen/IO-path warm-up so the first timed query doesn't absorb
+    * session startup: exercise codegen, a shuffle, and the parquet reader
+    * (via the 5-row region table — no meaningful data cached). */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(1000).selectExpr("id", "id * 2 AS x")
+      .groupBy((org.apache.spark.sql.functions.col("id") % 7).as("k"))
+      .count().write.format("noop").mode("overwrite").save()
+    spark.read.parquet(s"${sfDir.stripSuffix("/")}/region.parquet")
+      .write.format("noop").mode("overwrite").save()
+  }
 
   /** The one-line bench JSON. Success entries stay plain numbers (the
     * driver's established contract); only FAILED queries become
@@ -70,25 +78,27 @@ object Bench {
     * `queries` schema. */
   def renderJson(results: Seq[QueryResult], sfDir: String,
       indexBuilds: Seq[(String, Double)] = Nil): String = {
-    val qs = results.map { r =>
-      r.err match {
-        case None => "\"" + r.name + "\":" + r.sec
-        case Some(m) => "\"" + r.name + "\":" + s"""{"sec":${r.sec},"err":${jstr(m)}}"""
-      }
-    }.mkString("{", ",", "}")
+    val qs = results.map(entry(_)).mkString("{", ",", "}")
     val sharedFlags = results.collect { case r if r.shared =>
       "\"" + r.name + "\":" + r.warm
     }.mkString("{", ",", "}")
-    // index builds are real work this run did: the total includes them
-    // (comparable across rounds), while per-query numbers stay probe-only
-    val total = results.map(_.sec).sum + indexBuilds.map(_._2).sum
-    val errors = results.count(_.err.isDefined)
     val builds = indexBuilds.map { case (st, sec) => "\"" + st + "\":" + sec }
       .mkString("{", ",", "}")
-    s"""{"metric":"total","value":$total,"unit":"sec","errors":$errors,""" +
-      s""""index_build":$builds,""" +
-      s""""shared_stage_hit":$sharedFlags,"queries":$qs,"sf":${jstr(sfDir)}}"""
+    header(results, indexBuilds) + s""""index_build":$builds,""" +
+      s""""shared_stage_hit":$sharedFlags,"queries":$qs,"sf":${quote(sfDir)}}"""
   }
+
+  /** The leading `metric/value/unit/errors` fields both lines share. Index
+    * builds are real work this run did: the total includes them
+    * (comparable across rounds), while per-query numbers stay probe-only. */
+  private def header(results: Seq[QueryResult], indexBuilds: Seq[(String, Double)]): String =
+    s"""{"metric":"total","value":${results.map(_.sec).sum + indexBuilds.map(_._2).sum},""" +
+      s""""unit":"sec","errors":${results.count(_.err.isDefined)},"""
+
+  /** One `queries` entry: plain seconds, or `{sec, err}` for a failure. */
+  private def entry(r: QueryResult, errChars: Int = Int.MaxValue): String =
+    "\"" + r.name + "\":" + r.err.fold(r.sec.toString)(m =>
+      s"""{"sec":${r.sec},"err":${quote(m.take(errChars))}}""")
 
   /** Stdout-budgeted final line. The harness that captures our stdout
     * keeps only a ~2 KB TAIL, so the 267-query full line arrives
@@ -100,73 +110,40 @@ object Bench {
   def renderCompactJson(results: Seq[QueryResult], sfDir: String,
       indexBuilds: Seq[(String, Double)], detailPath: String,
       budgetBytes: Int = 1800): String = {
-    val total = results.map(_.sec).sum + indexBuilds.map(_._2).sum
-    val errors = results.count(_.err.isDefined)
-    def entry(r: QueryResult): String = r.err match {
-      case None => "\"" + r.name + "\":" + r.sec
-      case Some(m) => "\"" + r.name + "\":" +
-        s"""{"sec":${r.sec},"err":${jstr(m.take(80))}}"""
-    }
-    val ordered = results.filter(_.err.isDefined) ++
-      results.filter(_.err.isEmpty).sortBy(-_.sec)
+    val ordered = (results.filter(_.err.isDefined) ++
+      results.filter(_.err.isEmpty).sortBy(-_.sec)).map(entry(_, errChars = 80))
     def render(qs: Seq[String], omitted: Int): String =
-      s"""{"metric":"total","value":$total,"unit":"sec","errors":$errors,""" +
+      header(results, indexBuilds) +
         s""""queries_total":${results.size},"queries_omitted":$omitted,""" +
-        s""""detail":${jstr(detailPath)},""" +
-        s""""queries":${qs.mkString("{", ",", "}")},"sf":${jstr(sfDir)}}"""
+        s""""detail":${quote(detailPath)},""" +
+        s""""queries":${qs.mkString("{", ",", "}")},"sf":${quote(sfDir)}}"""
     // grow the included set until the rendered line would exceed budget
     val kept = scala.collection.mutable.ArrayBuffer[String]()
     var i = 0
     while (i < ordered.length &&
-        render(kept.toSeq :+ entry(ordered(i)),
+        render(kept.toSeq :+ ordered(i),
           results.size - kept.size - 1).length <= budgetBytes) {
-      kept += entry(ordered(i)); i += 1
+      kept += ordered(i); i += 1
     }
     render(kept.toSeq, results.size - kept.size)
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER=local-cluster[n,c,memMb] benches against real
-    // executor JVMs; default stays local (the committed-baseline shape)
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = graft.run.GraftSession.withMaster(SparkSession.builder(), master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // sketch TypedImperativeAggregates (MinHashAgg/SimHashAgg) keep
-      // small fixed-size buffers; let ObjectHashAggregate hold many groups
-      // before sort-based fallback
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 100000)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same adaptive posture as GraftSession profiles: runtime partition
-      // coalescing collapses the 32 reducer tasks of tiny shuffles (most of
-      // the inventory at small SF), skew-join splits the heavy ones
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.run.GraftSession.fromEnv()
     // Silence the "No Partition Defined for Window operation!" wall in the
     // BENCH tail only (r12 VERDICT item 5): every global window in the
     // inventory is bounded-input by construction and individually audited
     // (Retrieval ranks top-k outputs, Sampling windows a merged histogram,
     // Layout windows a metadata inventory) — hundreds of repeats of the
     // same benign line drown any REAL unpartitioned-window regression.
-    // Scoped to the bench session alone: Verify, JobProbe, tests and
+    // Scoped to the bench session alone: Verify, ScaleProbe, tests and
     // production sessions keep the warning, so a new offender still
     // surfaces where plans are inspected.
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window",
       org.apache.logging.log4j.Level.ERROR)
-    // JIT/codegen/IO-path warmup so the alphabetically-first query doesn't
-    // absorb session startup: exercise codegen, a shuffle, and the parquet
-    // reader (via the 5-row region table — no meaningful data cached)
-    spark.range(1000).selectExpr("id", "id * 2 AS x")
-      .groupBy((org.apache.spark.sql.functions.col("id") % 7).as("k"))
-      .count().write.format("noop").mode("overwrite").save()
-    spark.read.parquet(s"${sfDir.stripSuffix("/")}/region.parquet")
-      .write.format("noop").mode("overwrite").save()
+    warmUp(spark, sfDir)
     val (results, builds) = runQueries(spark, sfDir, SparkEntry.selectedQueries)
     // full per-query detail goes to a FILE (survives any stdout tailing);
     // stdout carries the budget-bounded line the capture window can hold

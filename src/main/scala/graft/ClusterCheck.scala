@@ -110,12 +110,7 @@ object ClusterCheck {
   )
 
   private def runAll(master: String, sfDir: String): Map[String, Seq[String]] = {
-    val b = graft.run.GraftSession.withMaster(SparkSession.builder(), master)
-      .appName("graft-clustercheck")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 100000)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val b = graft.run.GraftSession.builder(master, 8)
     // SPARK_GRAFT_SERIALIZER=kryo proves the serializer clusterConf
     // advertises for deployments round-trips every custom buffer,
     // broadcast value, and task closure across executor JVMs too

@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
-/** Plan-audit dump (dev tool, mirrors Verify's session): writes each
+/** Plan-audit dump (dev tool, on the session Bench and Verify run): writes each
   * inventory query's `explain("formatted")` output to `outDir/<name>.txt`
   * so plan regressions (a surprise CartesianProduct, a lost partial
   * aggregate, a filter that stopped pushing down) can be grepped and
@@ -11,14 +10,7 @@ import java.nio.file.{Files, Paths}
 object Explain {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.run.GraftSession.fromEnv()
     Files.createDirectories(Paths.get(outDir))
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {

@@ -220,14 +220,7 @@ object GenData {
     val only =
       if (args.length > 2) args(2).split(',').map(_.trim).filter(_.nonEmpty).toSet
       else Set.empty[String]
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.run.GraftSession.fromEnv()
     writeAll(spark, outDir, sfStr.toDouble, only)
     spark.stop()
   }

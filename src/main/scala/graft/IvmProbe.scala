@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.meta.MetaJson.quote
 
 /** Measurement harness for the incremental-join-maintenance claim
   * (BASELINE.md): given a materialized fact⋈fact view on disk and a
@@ -63,17 +64,7 @@ object IvmProbe {
     require(deltaPct >= 1 && deltaPct <= 50 && 100 % deltaPct == 0,
       s"deltaPct must divide 100 (got $deltaPct) so the reported " +
         "fraction is the applied one")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // no spark.driver.memory here: the JVM is already running (sbt fork
-    // options own the heap) and a builder config would be a silent no-op
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-ivmprobe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.run.GraftSession.fromEnv()
     import graft.operators.IncrementalJoin
 
     val joinKeys = Seq("o_orderkey")
@@ -247,7 +238,7 @@ object IvmProbe {
     }
 
     val out = new StringBuilder
-    out.append(s"""{"probe":"ivm","sf_dir":"$sfDir","delta_pct":$deltaPct,"mode":"$mode"""")
+    out.append(s"""{"probe":"ivm","sf_dir":${quote(sfDir)},"delta_pct":$deltaPct,"mode":"$mode"""")
     (0 until reps).foreach { r =>
       if (mode == "inner" || mode == "both") {
         val (tScratch, nScratch, mbScratch, rcScratch) = time(

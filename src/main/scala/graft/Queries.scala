@@ -23,9 +23,6 @@ object Queries {
   private def q(name: String, oracle: String)(fn: Q): Unit =
     registry(name) = (fn, Some(oracle))
 
-  private def qNoOracle(name: String)(fn: Q): Unit =
-    registry(name) = (fn, None)
-
   /** Shared stage for the dedup family: the (doc_id, sh_str) shingle
     * explosion over `documents`, persisted once per (session, dir) so
     * q_dedup_ngram / q_dedup_clusters / q_dedup_minhash don't each redo the

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.catalog.GraftCatalog
 import graft.meta.DatabaseMeta
-import graft.sources.Tables
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {

@@ -1,25 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.meta.MetaJson.quote
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER=local-cluster[2,4,2048] runs the whole dump
-    // against real executor JVMs (serialization proof); default local
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = graft.run.GraftSession.withMaster(SparkSession.builder(), master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // sketch TypedImperativeAggregates (MinHashAgg/SimHashAgg) keep
-      // small fixed-size buffers; let ObjectHashAggregate hold many groups
-      // before sort-based fallback
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 100000)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_MASTER=local-cluster[2,4,2048]: real executor JVMs
+    val spark = graft.run.GraftSession.fromEnv()
     new java.io.File(outDir).mkdirs()
     // dev filter: SPARK_GRAFT_ONLY=q_a,q_b reruns a subset (unset = all)
     SparkEntry.selectedQueries
@@ -30,20 +18,8 @@ object Verify {
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
       }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${quote(k)}: ${quote(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -4,7 +4,6 @@ import java.text.Normalizer
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String

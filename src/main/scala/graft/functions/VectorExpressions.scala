@@ -416,10 +416,6 @@ object VectorFunctions {
   def vecNorm(a: Column): Column =
     GraftSqlBridge.column(VectorNorm(GraftSqlBridge.expression(a)))
 
-  /** cosine(a,b) = dot/(|a||b|) — same formula/order as Similarity.cosine. */
-  def vecCosine(a: Column, b: Column): Column =
-    vecDot(a, b) / (vecNorm(a) * vecNorm(b))
-
   /** struct(scale, q_sum, q_sqsum) int8-quantization stats, one pass. */
   def vecQuantStats(a: Column): Column =
     GraftSqlBridge.column(VectorQuantStats(GraftSqlBridge.expression(a)))

@@ -18,6 +18,10 @@ object MetaJson {
   private val mapper = new ObjectMapper()
   private val writer = mapper.writerWithDefaultPrettyPrinter()
 
+  /** `s` as a JSON string literal, quotes included — the one escaper for
+    * the hand-assembled JSON lines the mains print. */
+  def quote(s: String): String = mapper.writeValueAsString(s)
+
   // ---- JsonNode <-> plain Scala (for glue_specific / enum payloads) ----
 
   def nodeToScala(n: JsonNode): Any = {

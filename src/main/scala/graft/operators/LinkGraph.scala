@@ -42,7 +42,6 @@ object LinkGraph {
       materializeEvery: Int = 8): DataFrame = {
     require(iterations >= 1, "pageRank needs >= 1 iteration")
     require(materializeEvery >= 1, "materializeEvery must be >= 1")
-    val spark = edges.sparkSession
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
       .distinct()

@@ -144,7 +144,6 @@ object Multimodal {
     * shape is what a vectorized decoder needs (decode `batchSize`
     * payloads at a time, amortizing codec/model setup per batch). */
   def extractFeatures(media: DataFrame, batchSize: Int = 64): DataFrame = {
-    val spark = media.sparkSession
     val outSchema = StructType(Seq(
       StructField("media_id", LongType, nullable = false),
       StructField("features", ArrayType(FloatType))))
@@ -167,7 +166,6 @@ object Multimodal {
     * decoded) — decoded=false rows carry nulls for the dims (payload not
     * claimed by any installed codec). */
   def imageInfo(media: DataFrame, batchSize: Int = 64): DataFrame = {
-    val spark = media.sparkSession
     val outSchema = StructType(Seq(
       StructField("media_id", LongType, nullable = false),
       StructField("width", IntegerType),
@@ -192,7 +190,6 @@ object Multimodal {
     * the payload (a real impl samples decoded video frames; the chunked
     * binary slicing and row-explosion shape are identical). */
   def sampleFrames(media: DataFrame, frameBytes: Int, stride: Int): DataFrame = {
-    val spark = media.sparkSession
     val outSchema = StructType(Seq(
       StructField("media_id", LongType, nullable = false),
       StructField("frame_no", IntegerType, nullable = false),
@@ -252,7 +249,6 @@ object Multimodal {
     require(targetW > 0 && targetH > 0, "target dimensions must be positive")
     require(targetW.toLong * targetH <= Int.MaxValue,
       s"target ${targetW}x$targetH overflows a byte array")
-    val spark = media.sparkSession
     val encoder = org.apache.spark.sql.Encoders.row(mediaSchema)
     media.select("media_id", "payload", "meta").mapPartitions { it =>
       it.grouped(batchSize).flatMap { batch =>

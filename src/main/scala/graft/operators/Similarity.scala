@@ -802,7 +802,7 @@ object Similarity {
     * directory on disk (the delete-then-rename order a crash turns into
     * a permanently missing index). [[recoverDirSwap]] finishes either
     * interrupted half. Single-writer contract (same as refresh). */
-  private def atomicDirSwap(fs: org.apache.hadoop.fs.FileSystem,
+  private[operators] def atomicDirSwap(fs: org.apache.hadoop.fs.FileSystem,
       path: String, staging: String, op: String): Unit = {
     val live = new org.apache.hadoop.fs.Path(path)
     val aside = new org.apache.hadoop.fs.Path(s"${path}_preswap")
@@ -823,7 +823,7 @@ object Similarity {
     * present + aside present → the swap completed but cleanup didn't;
     * drop the aside copy. Idempotent, called from every lifecycle entry
     * (probes via annVisible, refresh via the meta readers, compaction). */
-  private def recoverDirSwap(fs: org.apache.hadoop.fs.FileSystem,
+  private[operators] def recoverDirSwap(fs: org.apache.hadoop.fs.FileSystem,
       path: String): Unit = {
     val live = new org.apache.hadoop.fs.Path(path)
     val aside = new org.apache.hadoop.fs.Path(s"${path}_preswap")

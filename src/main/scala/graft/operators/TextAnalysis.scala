@@ -661,6 +661,8 @@ object TextAnalysis {
       path: String): String = {
     val metaPath = new org.apache.hadoop.fs.Path(path, TextIndexMetaFile)
     val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // finish a compaction swap a crash interrupted (see compactTextIndex)
+    Similarity.recoverDirSwap(fs, path)
     require(fs.exists(metaPath), s"no $TextIndexMetaFile under $path — not a text index")
     val metaJson = {
       val in = fs.open(metaPath)
@@ -768,14 +770,18 @@ object TextAnalysis {
     * compaction costs one postings scan + the usual aggregates, never a
     * corpus re-tokenization; after it the index is BIT-IDENTICAL to one
     * built over the surviving documents (spec-pinned), and the
-    * tombstone set is cleared. Surviving postings write to a staging
-    * dir first and swap in via one directory rename (a self-overwrite
-    * would delete what it is reading). */
+    * tombstone set is cleared. The whole rewritten index (postings,
+    * terms, consts, meta) is staged under `${path}_compacting` and
+    * swapped in by [[Similarity.atomicDirSwap]] — the live index is
+    * never rewritten in place, and a crash anywhere is replayed by
+    * [[Similarity.recoverDirSwap]] at the next lifecycle entry. */
   def compactTextIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
     readTextIndexMeta(spark, path)
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staging = s"${path}_compacting"
+    fs.delete(new org.apache.hadoop.fs.Path(staging), true) // a crashed run's leftovers
     val tombPath = new org.apache.hadoop.fs.Path(s"$path/tombstones")
     val postings = spark.read.parquet(s"$path/postings")
     val surviving =
@@ -785,23 +791,22 @@ object TextAnalysis {
     // bucket is read back as a partition column — reuse it verbatim
     surviving.repartition(col("bucket"))
       .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$path/postings_compacting")
-    val compacted = spark.read.parquet(s"$path/postings_compacting")
+      .parquet(s"$staging/postings")
+    val compacted = spark.read.parquet(s"$staging/postings")
     // terms/consts recompute from the COMPACTED copy (no self-reference)
     val bucket = col("bucket")
     compacted.groupBy("term")
       .agg(count(lit(1)).as("df"), first(bucket).as("bucket"))
-      .write.mode("overwrite").parquet(s"$path/terms")
+      .write.mode("overwrite").parquet(s"$staging/terms")
     compacted.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
       .agg(count(lit(1)).as("n_docs"), coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/consts")
-    val livePath = new org.apache.hadoop.fs.Path(s"$path/postings")
-    fs.delete(livePath, true)
-    if (!fs.rename(new org.apache.hadoop.fs.Path(s"$path/postings_compacting"),
-        livePath))
-      throw new java.io.IOException(
-        s"compactTextIndex: staging swap failed under $path")
-    fs.delete(tombPath, true)
+      .coalesce(1).write.mode("overwrite").parquet(s"$staging/consts")
+    org.apache.hadoop.fs.FileUtil.copy(fs,
+      new org.apache.hadoop.fs.Path(path, TextIndexMetaFile), fs,
+      new org.apache.hadoop.fs.Path(staging, TextIndexMetaFile),
+      false, spark.sparkContext.hadoopConfiguration)
+    // the staged copy carries no tombstones: the swap clears them
+    Similarity.atomicDirSwap(fs, path, staging, "compactTextIndex")
   }
 
   /** BM25 probe against a [[buildTextIndex]] layout: probe terms are the

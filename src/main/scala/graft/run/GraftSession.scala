@@ -5,14 +5,13 @@ import org.apache.spark.sql.SparkSession
 /** Session factory encoding the engine's production tuning (the §2.I
   * "job definition" analog of the reference's worker-type/count cluster
   * sizing, `etl_manager/etl.py:252-330`, re-expressed as Spark confs).
-  *
-  * Two profiles:
-  *  - [[local]]: the test/bench shape (all cores of one machine).
-  *  - [[clusterConf]]: the conf map a 100 TB deployment submits with —
-  *    shuffle partitioned ~2-3x total cores, AQE on with skew-join
-  *    splitting, 128 MB scan partitions, broadcast threshold sized to
-  *    executor memory headroom.
-  */
+  * The only place a `SparkSession` is built — the mains ([[fromEnv]]),
+  * tests and ClusterCheck ([[builder]]) and the benchmark ([[local]]) —
+  * so plan dumps, probe numbers, oracle dumps and tests run the bench's
+  * conf. [[clusterConf]] is the conf map a 100 TB deployment submits
+  * with: shuffle partitioned ~2-3x total cores, AQE on with skew-join
+  * splitting, 128 MB scan partitions, broadcast threshold sized to
+  * executor memory headroom. */
 object GraftSession {
 
   /** The JDK17 `--add-opens` flags Spark 4 needs when a JVM is launched
@@ -29,6 +28,19 @@ object GraftSession {
     "java.base/sun.security.action", "java.base/sun.util.calendar",
   ).map(p => s"--add-opens=$p=ALL-UNNAMED")
 
+  /** Engine posture shared by every local session and [[clusterConf]]. */
+  private[run] val engineConf: Seq[(String, String)] = Seq(
+    "spark.sql.session.timeZone" -> "UTC",
+    // AQE: runtime coalescing, skew-join splitting, plan re-opt
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    // sketch TypedImperativeAggregates (MinHashAgg/SimHashAgg) keep
+    // small fixed-size buffers; let ObjectHashAggregate hold many groups
+    // before sort-based fallback
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "100000",
+  )
+
   /** Apply a master URL to a builder. A `local-cluster[n,cores,memMb]`
     * master spawns REAL executor JVMs (the single-machine rehearsal of a
     * standalone cluster — every task result, broadcast, and aggregate
@@ -37,18 +49,37 @@ object GraftSession {
     * from class directories, not an assembled jar) and the add-opens
     * list. Requires SPARK_HOME and SPARK_SCALA_VERSION in the
     * environment (build.sbt sets both for forked runs). */
-  def withMaster(b: SparkSession.Builder, master: String): SparkSession.Builder =
+  private def withMaster(b: SparkSession.Builder, master: String): SparkSession.Builder =
     if (master.startsWith("local-cluster")) b.master(master)
       .config("spark.executor.extraClassPath", sys.props("java.class.path"))
       .config("spark.executor.extraJavaOptions", jdk17AddOpens.mkString(" "))
     else b.master(master)
 
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val b = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", cores)
-    commonConf(b).getOrCreate()
+  /** The shared conf on an unfinished builder. Sessions it creates have
+    * graft's SQL functions ([[graft.GraftExtensions]]) registered. */
+  def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
+    engineConf.foldLeft(withMaster(SparkSession.builder(), master)
+        .appName("graft")
+        .config("spark.sql.shuffle.partitions", shufflePartitions)
+        .config("spark.ui.enabled", "false")
+        .withExtensions(new graft.GraftExtensions)) {
+      case (b, (k, v)) => b.config(k, v)
+    }
+
+  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
+    builder(s"local[$cores]", cores).getOrCreate()
+
+  /** The mains' session: `SPARK_GRAFT_CPUS` cores (default: all of this
+    * machine's) and shuffle partitions, on `SPARK_GRAFT_MASTER` when set
+    * (e.g. `local-cluster[2,4,2048]` for real executor JVMs), else
+    * `local[cpus]`. */
+  def fromEnv(): SparkSession = {
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+    val spark = builder(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"), cpus)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 
   /** Conf map for a real cluster submit (spark-submit --conf ...). Pure
@@ -57,7 +88,7 @@ object GraftSession {
   def clusterConf(executors: Int, coresPerExecutor: Int = 4,
       executorMemoryGb: Int = 16): Map[String, String] = {
     val totalCores = executors * coresPerExecutor
-    Map(
+    engineConf.toMap ++ Map(
       "spark.executor.instances" -> executors.toString,
       "spark.executor.cores" -> coresPerExecutor.toString,
       "spark.executor.memory" -> s"${executorMemoryGb}g",
@@ -66,15 +97,9 @@ object GraftSession {
       "spark.sql.shuffle.partitions" -> (totalCores * 5 / 2).toString,
       // 128 MB scan splits: the parquet row-group sweet spot
       "spark.sql.files.maxPartitionBytes" -> (128L * 1024 * 1024).toString,
-      // AQE: runtime coalescing, skew-join splitting, plan re-opt
-      "spark.sql.adaptive.enabled" -> "true",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
-      "spark.sql.adaptive.skewJoin.enabled" -> "true",
       // dims up to ~256 MB broadcast when executors have 16g
       "spark.sql.autoBroadcastJoinThreshold" ->
         (math.min(256, executorMemoryGb * 16).toString + "MB"),
-      "spark.sql.session.timeZone" -> "UTC",
-      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "100000",
       "spark.serializer" -> "org.apache.spark.serializer.KryoSerializer",
       // multi-tenant sessions run many queries concurrently (see
       // ConcurrencySpec): FAIR keeps a long scan from starving short
@@ -82,11 +107,4 @@ object GraftSession {
       "spark.scheduler.mode" -> "FAIR",
     )
   }
-
-  private def commonConf(b: SparkSession.Builder): SparkSession.Builder = b
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.adaptive.skewJoin.enabled", "true")
-    .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 100000)
-    .config("spark.ui.enabled", "false")
 }

@@ -32,8 +32,4 @@ object Tables {
       }
     } else spark.read.parquet(path)
   }
-
-  /** Register every fixture table as a temp view under its plain name. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    all.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 }

@@ -62,14 +62,6 @@ object EventStreams {
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("total"))
 
-  /** Sliding 1-hour windows every 15 minutes. */
-  def slidingCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour", "15 minutes"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("n"))
-
   /** Session windows: 30-minute inactivity gap per user. */
   def sessionCounts(events: DataFrame): DataFrame =
     events

@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs (kept small: local[4],
-  * shuffle.partitions=4 — test-scale; prod sizing is the runner's job). */
+/** Shared local SparkSession for specs: the factory's conf on local[4],
+  * shuffle.partitions=4 (test-scale; prod sizing is the runner's job),
+  * plus a private warehouse dir. */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
@@ -12,16 +13,7 @@ trait SparkTestBase extends AnyFunSuite {
 
 object SparkTestBase {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      // sketch TypedImperativeAggregates (MinHashAgg/SimHashAgg) keep
-      // small fixed-size buffers; let ObjectHashAggregate hold many groups
-      // before sort-based fallback
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 100000)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val s = graft.run.GraftSession.builder("local[4]", 4)
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
       .getOrCreate()

@@ -369,6 +369,46 @@ class CatalogSpec extends SparkTestBase {
       == "Cannot find database in catalogue. Doing nothing.")
   }
 
+  test("updateDatabase: registers missing views; re-points existing ones only with updateExisting") {
+    val (v1, v2) = (tmp(), tmp())
+    write(s"$v1/b/t", "part-0.csv", Seq("1,old"))
+    write(s"$v2/b/t", "part-0.csv", Seq("1,new"))
+    write(s"$v2/b/u", "part-0.csv", Seq("2,added"))
+    val cols = Seq(ColumnMeta("id", "int"), ColumnMeta("s", "character"))
+    val t = TableMeta("t", "t/", cols)
+    val db = DatabaseMeta("updb", "b", tables = Seq(t))
+    val db2 = db.copy(tables = Seq(t, TableMeta("u", "u/", cols)))
+    def value(view: String): String = spark.sql(s"SELECT s FROM $view").head().getString(0)
+    GraftCatalog.registerDatabase(spark, db, v1)
+    try {
+      GraftCatalog.updateDatabase(spark, db2, v2, updateExisting = false)
+      assert(value("updb_t") == "old", "updateExisting = false must leave an existing view alone")
+      assert(value("updb_u") == "added", "a missing view must be registered")
+      GraftCatalog.updateDatabase(spark, db2, v2, updateExisting = true)
+      assert(value("updb_t") == "new", "updateExisting = true must re-point the existing view")
+    } finally GraftCatalog.unregisterDatabase(spark, db2)
+  }
+
+  test("analyzeDatabase: every persistent table gets sizeInBytes stats") {
+    val root = tmp()
+    import spark.implicits._
+    val tables = Seq("a", "b").map(n => TableMeta(n, s"$n/",
+      Seq(ColumnMeta("k", "int")), dataFormat = "parquet"))
+    val db = DatabaseMeta("anadb", "b", tables = tables)
+    tables.foreach(t => GraftCatalog.writeTable((0 until 10).toDF("k"), t,
+      db.tablePath(root, t.name), mode = "overwrite"))
+    GraftCatalog.registerDatabasePersistent(spark, db, root)
+    try {
+      GraftCatalog.analyzeDatabase(spark, db)
+      tables.foreach { t =>
+        val stats = spark.sql(s"DESCRIBE TABLE EXTENDED anadb.${t.name}").collect()
+          .find(_.getString(0) == "Statistics").map(_.getString(1))
+        assert(stats.exists(_.matches("""[1-9]\d* bytes.*""")),
+          s"${t.name}: no sizeInBytes in catalog stats: $stats")
+      }
+    } finally GraftCatalog.unregisterDatabasePersistent(spark, db)
+  }
+
   test("deleteData removes table dirs but respects warehouse boundary") {
     val root = tmp()
     write(s"$root/b/t", "part-0.csv", Seq("1"))

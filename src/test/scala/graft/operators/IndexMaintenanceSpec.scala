@@ -78,39 +78,48 @@ class IndexMaintenanceSpec extends SparkTestBase {
 
   test("a crashed compaction swap is recovered at the next lifecycle entry") {
     import org.apache.hadoop.fs.{FileUtil, Path}
+    val root = java.nio.file.Files.createTempDirectory("graft-swap-recover")
     val emb = Tables.load(spark, sf(), "embeddings")
       .select("vec_id", "embedding").filter(col("vec_id") < 60)
-    val root = java.nio.file.Files.createTempDirectory("graft-swap-recover")
-    val idx = s"$root/idx"
-    Similarity.buildLshIndex(emb, "vec_id", "embedding", idx)
-    val fs = new Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val probe = emb.filter(col("vec_id") === 0).head().getSeq[Float](1).toArray
-    val expected = Similarity.lshTopKIndexed(spark, idx, "vec_id",
-      "embedding", probe, 10).collect().toSeq
-
-    // crash state A: the swap's first rename completed (live moved
-    // aside), the staged compacted copy exists, live is MISSING — the
-    // pre-r10 delete-then-rename order left exactly a missing index here
+    val lsh = s"$root/lsh"
+    Similarity.buildLshIndex(emb, "vec_id", "embedding", lsh)
+    val vec = emb.filter(col("vec_id") === 0).head().getSeq[Float](1).toArray
+    val text = s"$root/text"
+    TextAnalysis.buildTextIndex(Tables.load(spark, sf(), "documents"),
+      "doc_id", "text", text, nBuckets = 8)
+    // (index dir, a probe entering the index's lifecycle) — both swap
+    // families share atomicDirSwap/recoverDirSwap
+    val cases: Seq[(String, () => Seq[org.apache.spark.sql.Row])] = Seq(
+      lsh -> (() => Similarity.lshTopKIndexed(spark, lsh, "vec_id",
+        "embedding", vec, 10).collect().toSeq),
+      text -> (() => TextAnalysis.bm25TopDocsIndexed(spark, text, nTerms = 3,
+        topK = 10).orderBy("term", "rk").collect().toSeq))
     val conf = spark.sparkContext.hadoopConfiguration
-    FileUtil.copy(fs, new Path(idx), fs, new Path(s"${idx}_compacting"),
-      false, conf)
-    assert(fs.rename(new Path(idx), new Path(s"${idx}_preswap")))
-    assert(!fs.exists(new Path(idx)))
-    // the next probe must recover (preferring the staged copy) and serve
-    val recovered = Similarity.lshTopKIndexed(spark, idx, "vec_id",
-      "embedding", probe, 10).collect().toSeq
-    assert(recovered == expected, "recovered index must serve identically")
-    assert(fs.exists(new Path(idx)) && !fs.exists(new Path(s"${idx}_preswap")),
-      "recovery must restore live and clear the aside copy")
+    val fs = new Path(lsh).getFileSystem(conf)
+    cases.foreach { case (idx, probe) =>
+      val expected = probe()
+      assert(expected.nonEmpty, s"$idx: the probe must return rows")
 
-    // crash state B: swap completed, aside cleanup didn't run
-    FileUtil.copy(fs, new Path(idx), fs, new Path(s"${idx}_preswap"),
-      false, conf)
-    val again = Similarity.lshTopKIndexed(spark, idx, "vec_id",
-      "embedding", probe, 10).collect().toSeq
-    assert(again == expected)
-    assert(!fs.exists(new Path(s"${idx}_preswap")),
-      "a completed swap's stale aside copy must be dropped")
+      // crash state A: the swap's first rename completed (live moved
+      // aside), the staged compacted copy exists, live is MISSING — the
+      // old delete-then-rename compactions (ANN, then text) left exactly
+      // a missing index here
+      FileUtil.copy(fs, new Path(idx), fs, new Path(s"${idx}_compacting"),
+        false, conf)
+      assert(fs.rename(new Path(idx), new Path(s"${idx}_preswap")))
+      assert(!fs.exists(new Path(idx)))
+      // the next probe must recover (preferring the staged copy) and serve
+      assert(probe() == expected, s"$idx: recovered index must serve identically")
+      assert(fs.exists(new Path(idx)) && !fs.exists(new Path(s"${idx}_preswap")),
+        s"$idx: recovery must restore live and clear the aside copy")
+
+      // crash state B: swap completed, aside cleanup didn't run
+      FileUtil.copy(fs, new Path(idx), fs, new Path(s"${idx}_preswap"),
+        false, conf)
+      assert(probe() == expected)
+      assert(!fs.exists(new Path(s"${idx}_preswap")),
+        s"$idx: a completed swap's stale aside copy must be dropped")
+    }
   }
 
   test("IVF refresh auto-compaction folds tombstones in on the same cadence") {

@@ -522,7 +522,8 @@ object GraftCatalog {
     * derive a TableMeta from an existing parquet file/folder. */
   def tableMetaFromParquet(spark: SparkSession, name: String, location: String,
       path: String): TableMeta =
-    TableMeta.fromSparkSchema(name, location, spark.read.parquet(path).schema)
+    TableMeta.fromSparkSchema(name, location,
+      graft.sources.ParquetState.read(spark, path).schema)
 
   /** Column-level schema drift between two snapshots of a table: every
     * column of either side with its agnostic type on each and a status —

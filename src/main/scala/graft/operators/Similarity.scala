@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.sources.ParquetState
 
 /** Similarity search over embedding columns (EXTENSION, SURVEY.md §2.K
   * q_sim_topk). Vectors are `array<float>`; all arithmetic is promoted to
@@ -665,10 +666,10 @@ object Similarity {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     recoverDirSwap(fs, path)
-    val main = spark.read.parquet(path)
+    val main = ParquetState.read(spark, path)
     val dp = new org.apache.hadoop.fs.Path(path, AnnDeltaDir)
     if (!fs.exists(dp)) main
-    else main.unionByName(spark.read.parquet(dp.toString).select(
+    else main.unionByName(ParquetState.read(spark, dp.toString).select(
       main.schema.fields.toSeq.map(f => col(f.name).cast(f.dataType).as(f.name)): _*))
   }
 
@@ -693,12 +694,13 @@ object Similarity {
     val existing = partDirs.filter(d =>
       fs.exists(new org.apache.hadoop.fs.Path(p, d)))
     if (existing.isEmpty) return annSegments(spark, path).filter(pred)
-    val main = spark.read.option("basePath", path)
+    val main = ParquetState.reader(spark, s"$path/${existing.head}")
+      .option("basePath", path)
       .parquet(existing.map(d => s"$path/$d"): _*)
       .filter(pred)
     val dp = new org.apache.hadoop.fs.Path(path, AnnDeltaDir)
     if (!fs.exists(dp)) main
-    else main.unionByName(spark.read.parquet(dp.toString).select(
+    else main.unionByName(ParquetState.read(spark, dp.toString).select(
         main.schema.fields.toSeq.map(f =>
           col(f.name).cast(f.dataType).as(f.name)): _*)
       .filter(pred))
@@ -793,7 +795,7 @@ object Similarity {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     recoverDirSwap(fs, path)
     if (!fs.exists(p)) rows
-    else rows.join(spark.read.parquet(s"$path/$AnnTombstoneDir"),
+    else rows.join(ParquetState.read(spark, s"$path/$AnnTombstoneDir"),
       Seq(idCol), "left_anti")
   }
 
@@ -823,7 +825,7 @@ object Similarity {
     * present + aside present → the swap completed but cleanup didn't;
     * drop the aside copy. Idempotent, called from every lifecycle entry
     * (probes via annVisible, refresh via the meta readers, compaction). */
-  private[operators] def recoverDirSwap(fs: org.apache.hadoop.fs.FileSystem,
+  private[graft] def recoverDirSwap(fs: org.apache.hadoop.fs.FileSystem,
       path: String): Unit = {
     val live = new org.apache.hadoop.fs.Path(path)
     val aside = new org.apache.hadoop.fs.Path(s"${path}_preswap")

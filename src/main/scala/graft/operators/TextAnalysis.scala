@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.sources.ParquetState
 
 /** Text analysis operators for training-data pipelines (EXTENSION,
   * SURVEY.md §2.K q_text_*). Everything is built from codegen'd
@@ -705,7 +706,7 @@ object TextAnalysis {
       .getOrElse(throw new IllegalArgumentException(
         s"text index meta at $path has no nBuckets: $metaJson"))
     if (checkDisjoint) {
-      val overlap = spark.read.parquet(s"$path/postings")
+      val overlap = ParquetState.read(spark, s"$path/postings")
         .select(col("doc_id")).distinct()
         .join(newDocs.select(col(idCol).as("doc_id")).distinct(),
           Seq("doc_id"), "left_semi").count()
@@ -728,7 +729,7 @@ object TextAnalysis {
         .write.mode("append").partitionBy("bucket").parquet(s"$path/postings")
       // vocab-sized merge; localCheckpoint materializes BEFORE the
       // overwrite deletes the directory being read
-      val merged = spark.read.parquet(s"$path/terms")
+      val merged = ParquetState.read(spark, s"$path/terms")
         .select(col("term"), col("df"))
         .join(tf.groupBy("term").agg(count(lit(1)).as("df_new")),
           Seq("term"), "full_outer")
@@ -740,7 +741,7 @@ object TextAnalysis {
       merged.write.mode("overwrite").parquet(s"$path/terms")
       val delta = dl.agg(count(lit(1)).as("dn"),
         coalesce(sum(col("dl")), lit(0L)).as("ds")).head()
-      val old = spark.read.parquet(s"$path/consts").head()
+      val old = ParquetState.read(spark, s"$path/consts").head()
       import spark.implicits._
       Seq((old.getLong(0) + delta.getLong(0), old.getLong(1) + delta.getLong(1)))
         .toDF("n_docs", "sum_dl")
@@ -783,16 +784,16 @@ object TextAnalysis {
     val staging = s"${path}_compacting"
     fs.delete(new org.apache.hadoop.fs.Path(staging), true) // a crashed run's leftovers
     val tombPath = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val postings = spark.read.parquet(s"$path/postings")
+    val postings = ParquetState.read(spark, s"$path/postings")
     val surviving =
       if (!fs.exists(tombPath)) postings
-      else postings.join(spark.read.parquet(s"$path/tombstones"),
+      else postings.join(ParquetState.read(spark, s"$path/tombstones"),
         Seq("doc_id"), "left_anti")
     // bucket is read back as a partition column — reuse it verbatim
     surviving.repartition(col("bucket"))
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$staging/postings")
-    val compacted = spark.read.parquet(s"$staging/postings")
+    val compacted = ParquetState.read(spark, s"$staging/postings")
     // terms/consts recompute from the COMPACTED copy (no self-reference)
     val bucket = col("bucket")
     compacted.groupBy("term")
@@ -823,29 +824,29 @@ object TextAnalysis {
       b: Double = 0.75, topK: Int = 10): DataFrame = {
     readTextIndexMeta(spark, path)
 
-    val probes = spark.read.parquet(s"$path/terms")
+    val probes = ParquetState.read(spark, s"$path/terms")
       .filter(length(col("term")) >= minTermLen)
       .orderBy(col("df").desc, col("term"))
       .limit(nTerms)
       .collect() // nTerms rows — driver-sized by construction
     val buckets = probes.map(_.getAs[Int]("bucket")).distinct.toSeq
     val probeDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(probes.toSeq.map(r =>
-        org.apache.spark.sql.Row(r.getAs[String]("term"), r.getAs[Long]("df"))), 1),
+      java.util.Arrays.asList(probes.toSeq.map(r =>
+        org.apache.spark.sql.Row(r.getAs[String]("term"), r.getAs[Long]("df"))): _*),
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("term",
           org.apache.spark.sql.types.StringType, nullable = false),
         org.apache.spark.sql.types.StructField("df",
           org.apache.spark.sql.types.LongType, nullable = false))))
-    val rawPostings = spark.read.parquet(s"$path/postings")
+    val rawPostings = ParquetState.read(spark, s"$path/postings")
       .filter(col("bucket").isin(buckets: _*))
     val tombPath = new org.apache.hadoop.fs.Path(s"$path/tombstones")
     val tombFs = tombPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val postings =
       if (!tombFs.exists(tombPath)) rawPostings
-      else rawPostings.join(spark.read.parquet(s"$path/tombstones"),
+      else rawPostings.join(ParquetState.read(spark, s"$path/tombstones"),
         Seq("doc_id"), "left_anti")
-    val consts = spark.read.parquet(s"$path/consts")
+    val consts = ParquetState.read(spark, s"$path/consts")
     val scored = postings
       .join(broadcast(probeDf), Seq("term"))
       .crossJoin(broadcast(consts))

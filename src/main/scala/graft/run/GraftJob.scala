@@ -154,10 +154,12 @@ object GraftJob {
               GraftCatalog.writeTable(df, sink.copy(columns = Seq.empty),
                 s"${outDir.stripSuffix("/")}/$name", mode = "overwrite")
               checkBudget()
-              spark.read.format(sinkFormat match {
-                case "csv" | "csv_quoted_nodate" => "csv"
-                case f => f
-              }).load(s"${outDir.stripSuffix("/")}/$name").count()
+              val sinkDir = s"${outDir.stripSuffix("/")}/$name"
+              (sinkFormat match {
+                case "parquet" => graft.sources.ParquetState.read(spark, sinkDir)
+                case "csv" | "csv_quoted_nodate" => spark.read.format("csv").load(sinkDir)
+                case f => spark.read.format(f).load(sinkDir)
+              }).count()
             } finally spark.sparkContext.clearJobGroup()
           }(scala.concurrent.ExecutionContext.global)
           val rows = scala.concurrent.Await.result(work,

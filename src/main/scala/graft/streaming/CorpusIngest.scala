@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.md5
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.Dedup
+import graft.sources.ParquetState
 
 /** Streaming corpus ingestion with per-micro-batch incremental dedup
   * (EXTENSION, SURVEY §2.J×§2.K): new document files stream in, each
@@ -67,12 +68,12 @@ object CorpusIngest {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (hashIndex && !hashBackfillDone) {
           if (StateDirs.hasParquetData(spark, corpusDir)) {
-            val corpusHashes = spark.read.parquet(corpusDir)
+            val corpusHashes = ParquetState.read(spark, corpusDir)
               .select(md5(org.apache.spark.sql.functions.col(textCol))
                 .as("corpus_content_hash"))
             val missing =
               if (StateDirs.hasParquetData(spark, hashDir))
-                corpusHashes.join(spark.read.parquet(hashDir),
+                corpusHashes.join(ParquetState.read(spark, hashDir),
                   Seq("corpus_content_hash"), "left_anti")
               else corpusHashes
             // pin before the append: the anti-join reads hashDir, and the
@@ -86,12 +87,12 @@ object CorpusIngest {
           if (!StateDirs.hasParquetData(spark, corpusDir)) fresh
           else nearDupThreshold match {
             case Some(t) =>
-              Dedup.dedupAgainstCorpus(fresh, spark.read.parquet(corpusDir),
+              Dedup.dedupAgainstCorpus(fresh, ParquetState.read(spark, corpusDir),
                 idCol, textCol, threshold = t)
             case None if hashIndex && StateDirs.hasParquetData(spark, hashDir) =>
-              Dedup.exactAgainstHashes(fresh, spark.read.parquet(hashDir), textCol)
+              Dedup.exactAgainstHashes(fresh, ParquetState.read(spark, hashDir), textCol)
             case None =>
-              Dedup.exactAgainstCorpus(fresh, spark.read.parquet(corpusDir), textCol)
+              Dedup.exactAgainstCorpus(fresh, ParquetState.read(spark, corpusDir), textCol)
           }
         if (hashIndex) {
           // two sinks (corpus + hash index) — localCheckpoint cuts the
@@ -148,7 +149,7 @@ object CorpusIngest {
         val fresh = Dedup.exactDedup(batch, idCol, textCol)
         val survivors =
           if (!StateDirs.hasParquetData(spark, corpusDir)) fresh
-          else Dedup.exactAgainstCorpus(fresh, spark.read.parquet(corpusDir), textCol)
+          else Dedup.exactAgainstCorpus(fresh, ParquetState.read(spark, corpusDir), textCol)
         // localCheckpoint — NOT persist: the corpus append below calls
         // refreshByPath(corpusDir), which UNCACHES any cached plan whose
         // lineage reads that path; a merely-persisted survivor set would
@@ -160,12 +161,10 @@ object CorpusIngest {
         val pinned = survivors.localCheckpoint()
         if (pinned.count() > 0) {
           pinned.write.mode("append").parquet(corpusDir)
-          // Hadoop FS probe, NOT java.io.File: a File check is always
-          // false for hdfs:// / s3a:// / file: URIs, which would send
-          // every batch down the buildTextIndex branch — whose
-          // mode("overwrite") silently replaces the index with one
-          // covering only that batch
-          if (fileExists(spark, s"$indexDir/_text_index_meta.json"))
+          // a wrong "absent" here sends the batch down the
+          // buildTextIndex branch — whose mode("overwrite") silently
+          // replaces the index with one covering only that batch
+          if (indexExists(spark, indexDir, "_text_index_meta.json"))
             graft.operators.TextAnalysis.refreshTextIndex(
               pinned, idCol, textCol, indexDir)
           else
@@ -234,13 +233,13 @@ object CorpusIngest {
         val survivors =
           if (!StateDirs.hasParquetData(spark, corpusDir)) fresh
           else fresh.join(
-            spark.read.parquet(corpusDir)
+            ParquetState.read(spark, corpusDir)
               .select(org.apache.spark.sql.functions.col(idCol)),
             Seq(idCol), "left_anti")
         val pinned = survivors.localCheckpoint()
         if (pinned.count() > 0) {
           pinned.write.mode("append").parquet(corpusDir)
-          val exists = fileExists(spark, s"$indexPath/$metaFile")
+          val exists = indexExists(spark, indexPath, metaFile)
           index match {
             case IvfIngest(k, iters) =>
               if (exists)
@@ -325,7 +324,7 @@ object CorpusIngest {
         val survivorIds =
           if (!StateDirs.hasParquetData(spark, sigsDir)) sigsNew.select("doc_id")
           else {
-            val sigIdx = spark.read.parquet(sigsDir)
+            val sigIdx = ParquetState.read(spark, sigsDir)
             val exactIds = sigsNew.join(
               sigIdx.select("content_hash"), Seq("content_hash"), "left_anti")
               .select("doc_id")
@@ -338,7 +337,7 @@ object CorpusIngest {
                 .filter(col("signature").isNotNull)
                 .select("doc_id", "signature"), numHashes, bands)
             val cands = Dedup.minHashCandidatesAgainst(bandsNew,
-              spark.read.parquet(bandsDir))
+              ParquetState.read(spark, bandsDir))
             val agree = aggregate(
               zip_with(col("_sa"), col("_sb"), (x, y) => (x === y).cast("int")),
               lit(0), (acc, v) => acc + v)
@@ -372,12 +371,19 @@ object CorpusIngest {
       .start()
   }
 
-  // Hadoop FileSystem probes (matching the index code's readTextIndexMeta
-  // discipline) — java.nio/java.io paths are local-filesystem-only and
-  // silently report "absent" for hdfs:// / s3a:// / file: URIs
-  private def fileExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  /** Build-vs-refresh probe of an index dir: does its meta file exist?
+    * A compaction swap a crash interrupted is finished first
+    * ([[graft.operators.Similarity.recoverDirSwap]]) — in the crash state
+    * where the live dir is moved aside, a bare probe reads "absent" and
+    * the batch would BUILD an index over itself alone. Hadoop FileSystem
+    * calls, not java.io: a File check reports "absent" for hdfs:// /
+    * s3a:// / file: URIs. */
+  private def indexExists(spark: SparkSession, indexDir: String,
+      metaFile: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(indexDir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    graft.operators.Similarity.recoverDirSwap(fs, indexDir)
+    fs.exists(new org.apache.hadoop.fs.Path(p, metaFile))
   }
 
 }

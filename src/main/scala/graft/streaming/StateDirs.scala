@@ -15,31 +15,12 @@ import org.apache.spark.sql.SparkSession
   */
 private[streaming] object StateDirs {
 
-  def hasParquetData(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return false
-    // skip Hadoop-hidden path components ('_'/'.' prefix) the whole way
-    // up to the state root: a crashed write can leave uncommitted
-    // _temporary/**/part-*.parquet behind, and counting those as "state
-    // exists" makes every later trigger spark.read.parquet a dir with no
-    // committed files — a permanent schema-inference failure where a
-    // clean bootstrap was the right answer.
-    val root = fs.makeQualified(p).toUri.getPath
-    def committed(f: org.apache.hadoop.fs.Path): Boolean = {
-      var cur = f
-      while (cur != null && cur.toUri.getPath != root) {
-        val n = cur.getName
-        if (n.startsWith("_") || n.startsWith(".")) return false
-        cur = cur.getParent
-      }
-      true
-    }
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val f = it.next().getPath
-      if (f.getName.endsWith(".parquet") && committed(f)) return true
-    }
-    false
-  }
+  // skip Hadoop-hidden path components ('_'/'.' prefix) the whole way
+  // up to the state root: a crashed write can leave uncommitted
+  // _temporary/**/part-*.parquet behind, and counting those as "state
+  // exists" makes every later trigger spark.read.parquet a dir with no
+  // committed files — a permanent schema-inference failure where a
+  // clean bootstrap was the right answer.
+  def hasParquetData(spark: SparkSession, dir: String): Boolean =
+    graft.sources.ParquetState.committedParquet(spark, dir).hasNext
 }

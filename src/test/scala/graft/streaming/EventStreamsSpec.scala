@@ -444,6 +444,62 @@ class EventStreamsSpec extends SparkTestBase {
       s"live index diverged from rebuild: $live vs $ref")
   }
 
+  test("streaming index ingest finishes a half-done compaction swap before build vs refresh") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.Path
+    val root = java.nio.file.Files.createTempDirectory("ingest_swap_recover")
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    // crash state A: the swap moved the live index aside and died before
+    // renaming the staged copy in — the live dir is MISSING
+    def crashA(idx: String): Unit = {
+      assert(fs.rename(new Path(idx), new Path(s"${idx}_preswap")))
+      assert(!fs.exists(new Path(idx)))
+    }
+    def at(name: String) = root.resolve(name).toString
+
+    // text index: batch a builds it, the crash hits, batch b must refresh
+    val docs = at("docs_in")
+    def ingestText(): Unit = CorpusIngest.ingestWithTextIndex(spark, docs, at("text_corpus"),
+      at("text_idx"), at("text_ckpt"), nBuckets = 4).awaitTermination()
+    (1L to 8L).map(i => (i, s"alpha document body number $i shared corpus"))
+      .toDF("doc_id", "text").repartition(1).write.parquet(s"$docs/f=a")
+    ingestText()
+    crashA(at("text_idx"))
+    (9L to 14L).map(i => (i, s"beta document body number $i shared corpus"))
+      .toDF("doc_id", "text").repartition(1).write.parquet(s"$docs/f=b")
+    ingestText()
+    val corpus = spark.read.parquet(at("text_corpus"))
+    assert(corpus.count() == 14)
+    assert(spark.read.parquet(s"${at("text_idx")}/consts").head().getLong(0) == 14,
+      "the text index must cover old and new docs, not the last batch alone")
+    graft.operators.TextAnalysis.buildTextIndex(corpus, "doc_id", "text", at("text_rebuilt"),
+      nBuckets = 4)
+    def bm25(p: String) = graft.operators.TextAnalysis.bm25TopDocsIndexed(
+      spark, p, nTerms = 2, topK = 20).orderBy("term", "rk").collect().toSeq
+    assert(bm25(at("text_idx")) == bm25(at("text_rebuilt")))
+
+    // IVF index: same story for the ANN twin
+    val vecs = at("vecs_in")
+    def vec(i: Long): Array[Float] = Array.tabulate(8)(d => math.sin(i * 13.0 + d).toFloat)
+    def ingestIvf(): Unit = CorpusIngest.ingestWithAnnIndex(spark, vecs, at("vec_corpus"),
+      at("ivf_idx"), at("vec_ckpt"), CorpusIngest.IvfIngest(k = 3)).awaitTermination()
+    (1L to 30L).map(i => (i, vec(i))).toDF("vec_id", "embedding")
+      .repartition(1).write.parquet(s"$vecs/f=a")
+    ingestIvf()
+    crashA(at("ivf_idx"))
+    (31L to 45L).map(i => (i, vec(i))).toDF("vec_id", "embedding")
+      .repartition(1).write.parquet(s"$vecs/f=b")
+    ingestIvf()
+    val cents = graft.operators.Similarity.readIvfCentroids(spark, at("ivf_idx")).get
+    graft.operators.Similarity.buildIvfIndex(spark.read.parquet(at("vec_corpus")),
+      "vec_id", "embedding", cents, at("ivf_rebuilt"))
+    def rows(p: String) = graft.operators.Similarity.readAnnIndex(spark, p, "vec_id")
+      .select("vec_id", "cell_id").orderBy("vec_id").collect().toSeq
+    assert(rows(at("ivf_idx")).size == 45,
+      "the IVF index must cover old and new vectors, not the last batch alone")
+    assert(rows(at("ivf_idx")) == rows(at("ivf_rebuilt")))
+  }
+
   test("stateful streaming funnel equals the batch cascade") {
     val steps = Seq("signup", "view", "purchase")
     val s = EventStreams.runAvailableNow(spark,

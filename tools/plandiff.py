@@ -13,6 +13,9 @@ differs between any two runs of the same code is normalized:
 - JVM lambda identities (`Foo$$$Lambda$6298/0x...@7afe09fb`) and the
   source lines of RDD call sites (`createDataFrame at Foo.scala:830`),
   which move whenever code above them does;
+- RDD ids (`MapPartitionsRDD[2919]`): a session-wide counter, so they
+  shift whenever code run earlier in the session creates more or fewer
+  RDDs;
 - the order of Spark's distinct-aggregate rewrite groups (`gid`): it
   follows expression hash codes, so lines mentioning `gid#` compare as a
   multiset of tokens, group numbers ignored.
@@ -33,6 +36,7 @@ NORMALIZE = [
     (re.compile(r"(graft_bkt_[A-Za-z0-9]+)_[0-9a-f]+\b"), r"\1_H"),
     (re.compile(r"\$\$Lambda[$\w/@]*"), "$$Lambda"),
     (re.compile(r"(\.scala):\d+"), r"\1:L"),
+    (re.compile(r"(RDD)\[\d+\]"), r"\1[N]"),
 ]
 GID_TOKENS = re.compile(r"[^\s,\[\]()]+")
 

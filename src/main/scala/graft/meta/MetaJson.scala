@@ -22,6 +22,13 @@ object MetaJson {
     * the hand-assembled JSON lines the mains print. */
   def quote(s: String): String = mapper.writeValueAsString(s)
 
+  /** `v` ([[scalaToNode]]'s domain) as compact JSON — the writer of the
+    * index sidecars. */
+  def render(v: Any): String = mapper.writeValueAsString(scalaToNode(v))
+
+  /** A JSON document as plain Scala ([[nodeToScala]]). */
+  def parse(json: String): Any = nodeToScala(mapper.readTree(json))
+
   // ---- JsonNode <-> plain Scala (for glue_specific / enum payloads) ----
 
   def nodeToScala(n: JsonNode): Any = {

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.sources.StateDir
 
 /** Physical-layout operators (EXTENSION, SURVEY.md §2.K): Z-order
   * (Morton) clustering keys for multi-dimensional data skipping, and
@@ -133,36 +134,6 @@ object Layout {
       root: String, targetBytes: Long): DataFrame =
     compactionPlan(fileInventory(spark, root), "file", "bytes", targetBytes)
 
-  /** EXECUTE the compaction plan: rewrite the parquet table under `root`
-    * so each output file holds exactly one plan bin (~`targetBytes` of
-    * input), with the staged-swap discipline of
-    * [[TextAnalysis.compactTextIndex]] — write to a staging sibling,
-    * verify nothing mid-flight serves from it, swap in with one
-    * directory rename, leave no tombstones behind. Returns the executed
-    * plan (file, bytes, bin — pinned before the rewrite, since the old
-    * inventory is unreadable after it).
-    *
-    * Shape: ONE distributed job — every row tags itself with its source
-    * file ([[org.apache.spark.sql.functions.input_file_name]]), joins
-    * the broadcast metadata-sized plan for its bin, and the write
-    * clusters by bin (`repartition(bin)` + dynamic `partitionBy`), so
-    * each bin's file is written by exactly one task — never a driver
-    * loop over the table's data. The only driver-side file work is the
-    * flatten renames, one per OUTPUT file (totalBytes/targetBytes — the
-    * minimum any compactor pays) plus the single swap rename.
-    *
-    * Semantics notes: row identity is exact (spec-pinned hash-equal
-    * read-back). A Hive-partitioned input is supported, but its
-    * partition COLUMNS materialize into the compacted files (the
-    * directory encoding flattens — schema-on-read is unchanged);
-    * callers wanting to keep a partitioned layout compact each
-    * partition directory separately, exactly as the reference scopes
-    * destructive maintenance to one partition path
-    * (`etl_manager/meta.py:769-791` delete_data_in_database). Crash
-    * safety: a failure before the swap leaves `root` untouched and the
-    * staging sibling is rebuilt from scratch on the next run
-    * (mode=overwrite); the delete→rename window is the same one every
-    * staged swap in this repo accepts. */
   /** EXECUTE a Z-order clustered rewrite of the parquet table under
     * `root`: range-partition the rows by their Morton key (so each of
     * the `nFiles` output files owns one contiguous Z-range), sort
@@ -181,8 +152,9 @@ object Layout {
     * pays, and nothing table-sized touches the driver. Schema is
     * unchanged: the key is recomputed as an expression on both sides of
     * the exchange, never materialized as a column. Crash safety as in
-    * [[compactFiles]]: failure before the swap leaves `root` untouched;
-    * the staging sibling is rebuilt from scratch on the next run.
+    * [[compactFiles]]: failure before the swap leaves `root` untouched,
+    * the staging sibling is rebuilt from scratch on the next run, and a
+    * crash inside the swap is finished on the next entry.
     *
     * `zKey` builds the Morton key from the table's own columns (compose
     * [[zorderKey]] with the caller's normalize-then-interleave scaling —
@@ -192,19 +164,15 @@ object Layout {
   def zorderCluster(spark: org.apache.spark.sql.SparkSession,
       root: String, zKey: DataFrame => Column, nFiles: Int): Unit = {
     require(nFiles >= 1, s"nFiles must be positive, got $nFiles")
-    import org.apache.hadoop.fs.Path
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StateDir.fs(spark, root)
+    StateDir.recover(fs, root)
     val staging = s"${root.stripSuffix("/")}_zordering"
     val df = spark.read.parquet(root)
     val z = zKey(df)
     df.repartitionByRange(nFiles, z)
       .sortWithinPartitions(z)
       .write.mode("overwrite").parquet(staging)
-    val stagingPath = new Path(staging)
-    if (!fs.delete(rootPath, true) || !fs.rename(stagingPath, rootPath))
-      throw new java.io.IOException(
-        s"zorderCluster: staging swap failed under $root")
+    StateDir.swap(fs, root, staging, "zorderCluster")
   }
 
   /** Per-FILE clustering evidence for an executed layout: group rows by
@@ -225,11 +193,42 @@ object Layout {
         min("_x").as("min_x"), max("_x").as("max_x"),
         min("_y").as("min_y"), max("_y").as("max_y"))
 
+  /** EXECUTE the compaction plan: rewrite the parquet table under `root`
+    * so each output file holds exactly one plan bin (~`targetBytes` of
+    * input), with the staged-swap discipline of
+    * [[TextAnalysis.compactTextIndex]] — write to a staging sibling,
+    * verify nothing mid-flight serves from it, swap it in, leave no
+    * tombstones behind. Returns the executed
+    * plan (file, bytes, bin — pinned before the rewrite, since the old
+    * inventory is unreadable after it).
+    *
+    * Shape: ONE distributed job — every row tags itself with its source
+    * file ([[org.apache.spark.sql.functions.input_file_name]]), joins
+    * the broadcast metadata-sized plan for its bin, and the write
+    * clusters by bin (`repartition(bin)` + dynamic `partitionBy`), so
+    * each bin's file is written by exactly one task — never a driver
+    * loop over the table's data. The only driver-side file work is the
+    * flatten renames, one per OUTPUT file (totalBytes/targetBytes — the
+    * minimum any compactor pays) plus the swap's two renames.
+    *
+    * Semantics notes: row identity is exact (spec-pinned hash-equal
+    * read-back). A Hive-partitioned input is supported, but its
+    * partition COLUMNS materialize into the compacted files (the
+    * directory encoding flattens — schema-on-read is unchanged);
+    * callers wanting to keep a partitioned layout compact each
+    * partition directory separately, exactly as the reference scopes
+    * destructive maintenance to one partition path
+    * (`etl_manager/meta.py:769-791` delete_data_in_database). Crash
+    * safety: a failure before the swap leaves `root` untouched and the
+    * staging sibling is rebuilt from scratch on the next run
+    * (mode=overwrite); the swap itself is [[graft.sources.StateDir.swap]],
+    * and a crash inside it is finished on the next entry here. */
   def compactFiles(spark: org.apache.spark.sql.SparkSession,
       root: String, targetBytes: Long): DataFrame = {
     import org.apache.hadoop.fs.Path
     val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StateDir.fs(spark, root)
+    StateDir.recover(fs, root)
     // pin the plan BEFORE the rewrite: its lineage lists the files being
     // replaced, and a lazy re-evaluation after the swap would read the
     // compacted listing instead
@@ -266,9 +265,7 @@ object Layout {
           s"compactFiles: flatten rename failed for bin $bin under $staging")
       fs.delete(d.getPath, true)
     }
-    if (!fs.delete(rootPath, true) || !fs.rename(stagingPath, rootPath))
-      throw new java.io.IOException(
-        s"compactFiles: staging swap failed under $root")
+    StateDir.swap(fs, root, staging, "compactFiles")
     plan
   }
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.sources.ParquetState
+import graft.sources.{ParquetState, StateDir}
 
 /** Similarity search over embedding columns (EXTENSION, SURVEY.md §2.K
   * q_sim_topk). Vectors are `array<float>`; all arithmetic is promoted to
@@ -294,53 +294,25 @@ object Similarity {
       // task (see buildLshIndex — avoids tasks × K open files)
       .repartition(col("cell_id"))
       .write.mode("overwrite").partitionBy("cell_id").parquet(path)
-    writeIvfMeta(embeddings.sparkSession, path, centroids)
-  }
-
-  private final val IvfMetaFile = "_ivf_index_meta.json"
-
-  /** The fitted centroids persisted NEXT TO the index as raw float bits
-    * (exact round trip — a decimal render could perturb a cell
-    * assignment): cell ids in the table are only meaningful against the
-    * EXACT centroids that assigned them, and [[refreshIvfIndex]] must
-    * assign new vectors with those, not a refit (the buildLshIndex /
-    * buildPqIndex metadata contract applied to IVF). */
-  private def writeIvfMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String, centroids: Seq[Array[Float]]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path, IvfMetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bits = centroids.map(_.map(java.lang.Float.floatToRawIntBits)
-      .mkString("[", ",", "]")).mkString("[", ",", "]")
-    val out = fs.create(p, true)
-    try out.write(
-      s"""{"k":${centroids.size},"dim":${centroids.head.length},"bits":$bits}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    // the centroids persisted NEXT TO the index as raw float bits (exact
+    // round trip — a decimal render could perturb a cell assignment):
+    // cell ids are only meaningful against the EXACT centroids that
+    // assigned them, and refreshIvfIndex must assign new vectors with
+    // those, not a refit (the LSH/PQ metadata contract applied to IVF)
+    StateDir.writeMeta(embeddings.sparkSession, path, StateDir.IvfMeta,
+      "k" -> centroids.size, "dim" -> centroids.head.length,
+      "bits" -> centroids.map(_.toSeq.map(java.lang.Float.floatToRawIntBits)))
   }
 
   /** Centroids read back from a [[buildIvfIndex]] metadata sidecar —
     * bit-exact. None for a pre-metadata index. */
   def readIvfCentroids(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[Seq[Array[Float]]] = {
-    val p = new org.apache.hadoop.fs.Path(path, IvfMetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverDirSwap(fs, path)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val raw =
-        try new String(
-          org.apache.commons.io.IOUtils.toByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      val bits = """"bits"\s*:\s*\[(.*)\]\s*\}""".r.findFirstMatchIn(raw)
-        .getOrElse(throw new IllegalArgumentException(
-          s"malformed IVF meta at $path: $raw")).group(1)
-      Some("""\[([^\[\]]*)\]""".r.findAllMatchIn(bits).map(m =>
-        m.group(1).split(",").map(s =>
-          java.lang.Float.intBitsToFloat(s.trim.toInt))).toSeq)
+      path: String): Option[Seq[Array[Float]]] =
+    StateDir.readMeta(spark, path, StateDir.IvfMeta).map { m =>
+      scala.util.Try(m("bits").asInstanceOf[Seq[Seq[Long]]]
+          .map(_.map(b => java.lang.Float.intBitsToFloat(b.toInt)).toArray))
+        .getOrElse(throw new IllegalArgumentException(s"malformed IVF meta at $path: $m"))
     }
-  }
 
   /** Incremental maintenance for a [[buildIvfIndex]] layout — the
     * [[graft.operators.TextAnalysis.refreshTextIndex]] discipline for
@@ -359,7 +331,7 @@ object Similarity {
       vecCol: String, path: String, autoCompactEvery: Int = 8): Unit = {
     val centroids = readIvfCentroids(newEmbeddings.sparkSession, path)
       .getOrElse(throw new IllegalArgumentException(
-        s"no $IvfMetaFile under $path — pre-metadata IVF indexes cannot " +
+        s"no ${StateDir.IvfMeta} under $path — pre-metadata IVF indexes cannot " +
           "refresh (their build centroids are unknown); rebuild instead"))
     // delta segment, not a partitioned append (r10 lesson, see
     // [[AnnDeltaDir]]): a partitioned append pays committer work per
@@ -434,7 +406,7 @@ object Similarity {
     else {
       val k = readIvfCentroids(spark, path).getOrElse(
         throw new IllegalArgumentException(
-          s"no $IvfMetaFile under $path — rebuild instead")).size
+          s"no ${StateDir.IvfMeta} under $path — rebuild instead")).size
       val all = readAnnIndex(spark, path, idCol)
         .select(col(idCol), col(vecCol))
         .unionByName(newEmbeddings.select(col(idCol), col(vecCol)))
@@ -443,9 +415,7 @@ object Similarity {
         val cents = fitCentroids(all, idCol, vecCol, k, iterations)
         val staging = s"${path}_refitting"
         buildIvfIndex(all, idCol, vecCol, cents, staging)
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        atomicDirSwap(fs, path, staging, "refreshIvfIndexAuto")
+        StateDir.swap(StateDir.fs(spark, path), path, staging, "refreshIvfIndexAuto")
       } finally all.unpersist()
     }
     decision
@@ -466,11 +436,11 @@ object Similarity {
       idCol: String, vecCol: String, centroids: Seq[Array[Float]],
       probe: Array[Float], k: Int, nprobe: Int = 2): DataFrame = {
     val cells = nearestCells(centroids, probe, nprobe)
-    annVisible(spark, indexPath,
+    StateDir.withoutTombstones(spark,
         annSegmentsPruned(spark, indexPath,
           cells.map(c => s"cell_id=$c"),
           col("cell_id").isin(cells: _*)),
-        idCol)
+        indexPath, AnnTombstoneDir, idCol)
       .select(col(idCol), round(cosine(col(vecCol), typedLit(probe.toSeq)), 6).as("cos"))
       .orderBy(col("cos").desc, col(idCol))
       .limit(k)
@@ -597,44 +567,18 @@ object Similarity {
         col("tb.table").as("table"), col("tb.bucket").as("bucket"))
       .repartition(col("table"), col("bucket"))
       .write.mode("overwrite").partitionBy("table", "bucket").parquet(path)
-    writeLshMeta(embeddings.sparkSession, path, d, nBits, nTables, seed)
+    StateDir.writeMeta(embeddings.sparkSession, path, StateDir.LshMeta,
+      "dim" -> d, "nBits" -> nBits, "nTables" -> nTables, "seed" -> seed)
   }
-
-  private final val LshMetaFile = "_lsh_index_meta.json"
 
   /** Index parameters persisted next to the data: a probe with different
     * (dim, nBits, nTables, seed) regenerates planes that no longer match
     * the stored signatures and silently returns wrong buckets — the
     * metadata turns that mismatch into an error at probe time. */
-  private def writeLshMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String, dim: Int, nBits: Int, nTables: Int, seed: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path, LshMetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(
-      s"""{"dim":$dim,"nBits":$nBits,"nTables":$nTables,"seed":$seed}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
   private def readLshMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[Map[String, Long]] = {
-    val p = new org.apache.hadoop.fs.Path(path, LshMetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverDirSwap(fs, path)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val raw =
-        try new String(
-          org.apache.commons.io.IOUtils.toByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      // four flat integer fields — a targeted regex beats a JSON dep
-      val kv = """"(\w+)"\s*:\s*(-?\d+)""".r
-      Some(kv.findAllMatchIn(raw).map(m => m.group(1) -> m.group(2).toLong).toMap)
-    }
-  }
+      path: String): Option[Map[String, Long]] =
+    StateDir.readMeta(spark, path, StateDir.LshMeta)
+      .map(_.collect { case (k, v: Long) => k -> v })
 
   private final val AnnTombstoneDir = "_tombstones"
 
@@ -653,24 +597,25 @@ object Similarity {
     * track the BATCH, probe cost stays amortized by the fold. */
   private final val AnnDeltaDir = "_delta"
 
-  /** Main segment ∪ the `_delta` refresh segment (if present). The main
+  /** `main` ∪ the `_delta` refresh segment (if present). The main
     * layout's partition-dir columns come back typed by directory-name
     * inference while the delta stores them natively, so the delta side
     * is aligned (column order and types) to the main schema before the
     * union — predicates pushed through the union still partition-prune
-    * the main side. Recovers a crashed compaction swap first (the read
-    * of a half-swapped dir would otherwise fail before any probe-side
-    * recovery ran). */
+    * the main side. */
+  private def withDelta(spark: org.apache.spark.sql.SparkSession,
+      path: String, main: DataFrame): DataFrame =
+    ParquetState.readSegment(spark, s"$path/$AnnDeltaDir").fold(main)(delta =>
+      main.unionByName(delta.select(
+        main.schema.fields.toSeq.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)))
+
+  /** Main segment ∪ `_delta`. Recovers a crashed compaction swap first
+    * (the read of a half-swapped dir would otherwise fail before any
+    * probe-side recovery ran). */
   private def annSegments(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverDirSwap(fs, path)
-    val main = ParquetState.read(spark, path)
-    val dp = new org.apache.hadoop.fs.Path(path, AnnDeltaDir)
-    if (!fs.exists(dp)) main
-    else main.unionByName(ParquetState.read(spark, dp.toString).select(
-      main.schema.fields.toSeq.map(f => col(f.name).cast(f.dataType).as(f.name)): _*))
+    StateDir.recover(StateDir.fs(spark, path), path)
+    withDelta(spark, path, ParquetState.read(spark, path))
   }
 
   /** [[annSegments]] restricted to KNOWN partition directories — the
@@ -683,27 +628,22 @@ object Similarity {
     * those dirs (driver-side existence checks, no listing job); `pred`
     * still applies — it re-states the dir choice for the main rows and
     * prunes the natively-stored delta segment. Falls back to the full
-    * [[annSegments]] when no probed dir exists (the all-empty-buckets
-    * edge keeps its schema from the main layout). */
+    * main layout when no probed dir exists (the all-empty-buckets edge
+    * keeps its schema from the main layout). */
   private def annSegmentsPruned(spark: org.apache.spark.sql.SparkSession,
       path: String, partDirs: Seq[String],
       pred: Column): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverDirSwap(fs, path)
+    val fs = StateDir.fs(spark, path)
+    StateDir.recover(fs, path)
     val existing = partDirs.filter(d =>
       fs.exists(new org.apache.hadoop.fs.Path(p, d)))
-    if (existing.isEmpty) return annSegments(spark, path).filter(pred)
-    val main = ParquetState.reader(spark, s"$path/${existing.head}")
-      .option("basePath", path)
-      .parquet(existing.map(d => s"$path/$d"): _*)
-      .filter(pred)
-    val dp = new org.apache.hadoop.fs.Path(path, AnnDeltaDir)
-    if (!fs.exists(dp)) main
-    else main.unionByName(ParquetState.read(spark, dp.toString).select(
-        main.schema.fields.toSeq.map(f =>
-          col(f.name).cast(f.dataType).as(f.name)): _*)
-      .filter(pred))
+    val main =
+      if (existing.isEmpty) ParquetState.read(spark, path)
+      else ParquetState.reader(spark, s"$path/${existing.head}")
+        .option("basePath", path)
+        .parquet(existing.map(d => s"$path/$d"): _*)
+    withDelta(spark, path, main).filter(pred)
   }
 
   /** The visible rows of an ANN layout: main ∪ `_delta` refresh segment,
@@ -713,35 +653,8 @@ object Similarity {
     * unfolded refreshes and still shows tombstoned rows). */
   def readAnnIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, idCol: String): DataFrame =
-    annVisible(spark, path, annSegments(spark, path), idCol)
-
-  /** Refresh counter sidecar — `.json`-suffixed so [[compactAnnIndex]]'s
-    * metadata carry-over keeps it across swaps. */
-  private final val RefreshCountFile = "_refresh_count.json"
-
-  private def readRefreshCount(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(path, RefreshCountFile)
-    if (!fs.exists(p)) 0
-    else {
-      val in = fs.open(p)
-      val raw =
-        try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      """"refreshes"\s*:\s*(\d+)""".r.findFirstMatchIn(raw)
-        .map(_.group(1).toInt).getOrElse(0)
-    }
-  }
-
-  private def writeRefreshCount(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, n: Int): Unit = {
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(path, RefreshCountFile), true)
-    try out.write(s"""{"refreshes":$n}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+    StateDir.withoutTombstones(spark, annSegments(spark, path), path,
+      AnnTombstoneDir, idCol)
 
   /** The Lucene merge discipline for append-style index refreshes:
     * every refresh appends at least one file per touched partition
@@ -763,13 +676,15 @@ object Similarity {
       path: String, idCol: String, partitionCols: Seq[String],
       autoCompactEvery: Int): Unit = {
     if (autoCompactEvery <= 0) return
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val n = readRefreshCount(fs, path) + 1
+    // the counter sidecar is `_*.json`, so compactAnnIndex carries it over
+    val n = StateDir.readMeta(spark, path, StateDir.RefreshCount)
+      .flatMap(_.get("refreshes")).collect { case c: Long => c.toInt }.getOrElse(0) + 1
+    def count(c: Int): Unit =
+      StateDir.writeMeta(spark, path, StateDir.RefreshCount, "refreshes" -> c)
     if (n >= autoCompactEvery) {
-      writeRefreshCount(fs, path, 0)
+      count(0)
       compactAnnIndex(spark, path, idCol, partitionCols)
-    } else writeRefreshCount(fs, path, n)
+    } else count(n)
   }
 
   /** Tombstone delete for ANY materialized ANN layout ([[buildIvfIndex]]
@@ -786,67 +701,10 @@ object Similarity {
     ids.select(col(idCol)).distinct()
       .write.mode("append").parquet(s"$path/$AnnTombstoneDir")
 
-  /** Anti-join a layout's tombstones out, if any (shared by the three
-    * indexed probes). Recovers a crashed compaction swap first, so a
-    * probe never reads a half-swapped (or missing) layout. */
-  private def annVisible(spark: org.apache.spark.sql.SparkSession,
-      path: String, rows: DataFrame, idCol: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/$AnnTombstoneDir")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverDirSwap(fs, path)
-    if (!fs.exists(p)) rows
-    else rows.join(ParquetState.read(spark, s"$path/$AnnTombstoneDir"),
-      Seq(idCol), "left_anti")
-  }
-
-  /** Crash-safe whole-directory replacement: rename live ASIDE, rename
-    * staging IN, delete the aside copy — never a window with NO live
-    * directory on disk (the delete-then-rename order a crash turns into
-    * a permanently missing index). [[recoverDirSwap]] finishes either
-    * interrupted half. Single-writer contract (same as refresh). */
-  private[operators] def atomicDirSwap(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, staging: String, op: String): Unit = {
-    val live = new org.apache.hadoop.fs.Path(path)
-    val aside = new org.apache.hadoop.fs.Path(s"${path}_preswap")
-    if (fs.exists(aside)) fs.delete(aside, true) // stale, completed swap
-    if (!fs.rename(live, aside))
-      throw new java.io.IOException(s"$op: could not move $path aside")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(staging), live)) {
-      fs.rename(aside, live) // restore the pre-swap index, then fail
-      throw new java.io.IOException(s"$op: staging swap failed under $path")
-    }
-    fs.delete(aside, true)
-  }
-
-  /** Replay a swap [[atomicDirSwap]] left half-done: live missing +
-    * aside present → the crash hit between the two renames; the staged
-    * copy could not be renamed in (or the next crash window lost it), so
-    * restore the aside copy — the compaction simply re-runs later. Live
-    * present + aside present → the swap completed but cleanup didn't;
-    * drop the aside copy. Idempotent, called from every lifecycle entry
-    * (probes via annVisible, refresh via the meta readers, compaction). */
-  private[graft] def recoverDirSwap(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Unit = {
-    val live = new org.apache.hadoop.fs.Path(path)
-    val aside = new org.apache.hadoop.fs.Path(s"${path}_preswap")
-    if (!fs.exists(aside)) return
-    if (fs.exists(live)) fs.delete(aside, true)
-    else {
-      val staging = new org.apache.hadoop.fs.Path(s"${path}_compacting")
-      // prefer the COMPACTED copy when it fully survived (tombstones
-      // already folded); otherwise restore the pre-swap index
-      if (fs.exists(staging) && !fs.rename(staging, live)) ()
-      if (!fs.exists(live) && !fs.rename(aside, live))
-        throw new java.io.IOException(
-          s"recoverDirSwap: cannot restore $path from $aside")
-      if (fs.exists(live)) { fs.delete(aside, true); () }
-    }
-  }
-
   /** Fold tombstones in and rewrite an ANN layout — one scan of the
     * index (never the raw embedding table), staged and swapped in via
-    * [[atomicDirSwap]] (rename-aside → rename-in → drop-aside; a crash
-    * anywhere is replayed by [[recoverDirSwap]] at the next lifecycle
+    * [[StateDir.swap]] (rename-aside → rename-in → drop-aside; a crash
+    * anywhere is replayed by [[StateDir.recover]] at the next lifecycle
     * entry — never a missing index), tombstones cleared. `partitionCols` must
     * match the layout (`cell_id` for IVF, `table`/`bucket` for LSH,
     * empty for the PQ code table); assignments are per-row, so the
@@ -854,14 +712,11 @@ object Similarity {
     * (spec-pinned). */
   def compactAnnIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, idCol: String, partitionCols: Seq[String]): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverDirSwap(fs, path)
-    val tombPath = new org.apache.hadoop.fs.Path(s"$path/$AnnTombstoneDir")
-    // annSegments folds the `_delta` refresh segment into the rewrite;
-    // the swap drops the old dir (delta and tombstones included), so
-    // the compacted layout is purely partitioned main-segment again
-    val surviving = annVisible(spark, path, annSegments(spark, path), idCol)
+    // readAnnIndex folds the `_delta` refresh segment and the tombstones
+    // into the rewrite (recovering a half-done swap first); the swap
+    // drops the old dir, so the compacted layout is purely partitioned
+    // main-segment again
+    val surviving = readAnnIndex(spark, path, idCol)
     val staging = s"${path}_compacting"
     val w0 = (if (partitionCols.nonEmpty)
         surviving.repartition(partitionCols.map(col): _*)
@@ -869,18 +724,10 @@ object Similarity {
       .write.mode("overwrite")
     (if (partitionCols.nonEmpty) w0.partitionBy(partitionCols: _*) else w0)
       .parquet(staging)
-    // metadata sidecars (_lsh/_ivf/_pq meta json) live INSIDE the dir and
-    // are invisible to the parquet scan — carry them over before the swap
-    val metaFiles = fs.listStatus(new org.apache.hadoop.fs.Path(path))
-      .filter(s => s.isFile && s.getPath.getName.startsWith("_")
-        && s.getPath.getName.endsWith(".json"))
-    metaFiles.foreach { m =>
-      org.apache.hadoop.fs.FileUtil.copy(fs, m.getPath, fs,
-        new org.apache.hadoop.fs.Path(staging, m.getPath.getName),
-        false, spark.sparkContext.hadoopConfiguration)
-    }
-    atomicDirSwap(fs, path, staging, "compactAnnIndex")
-    fs.delete(tombPath, true)
+    // metadata sidecars live INSIDE the dir and are invisible to the
+    // parquet scan — carry them over before the swap
+    StateDir.copySidecars(spark, path, staging)
+    StateDir.swap(StateDir.fs(spark, path), path, staging, "compactAnnIndex")
   }
 
   /** Incremental maintenance for a [[buildLshIndex]] layout: the stored
@@ -903,7 +750,7 @@ object Similarity {
     val spark = newEmbeddings.sparkSession
     val meta = readLshMeta(spark, path).getOrElse(
       throw new IllegalArgumentException(
-        s"no $LshMetaFile under $path — pre-metadata LSH indexes cannot " +
+        s"no ${StateDir.LshMeta} under $path — pre-metadata LSH indexes cannot " +
           "refresh (their plane parameters are unknown); rebuild instead"))
     val d = meta("dim").toInt
     val nBits = meta("nBits").toInt
@@ -958,9 +805,10 @@ object Similarity {
     val pred = sigs.map { case (t, sig) =>
       col("table") === t && col("bucket") === sig
     }.reduce(_ || _)
-    annVisible(spark, indexPath,
+    StateDir.withoutTombstones(spark,
         annSegmentsPruned(spark, indexPath,
-          sigs.map { case (t, sig) => s"table=$t/bucket=$sig" }, pred), idCol)
+          sigs.map { case (t, sig) => s"table=$t/bucket=$sig" }, pred),
+        indexPath, AnnTombstoneDir, idCol)
       .dropDuplicates(idCol)
       .select(col(idCol), round(cosine(col(vecCol), typedLit(probe.toSeq)), 6).as("cos"))
       .orderBy(col("cos").desc, col(idCol))
@@ -1302,8 +1150,6 @@ object Similarity {
         graft.functions.VectorFunctions.pqAssign(col(vecCol), codebooks).as("codes"))
   }
 
-  private final val PqMetaFile = "_pq_index_meta.json"
-
   /** Deterministic fingerprint of a codebook set (md5 over the float
     * bits in order): codes in a materialized table are only meaningful
     * against the EXACT codebooks that assigned them, so the probe path
@@ -1328,35 +1174,17 @@ object Similarity {
       codebooks: Seq[Seq[Array[Float]]], path: String): Unit = {
     pqPackedCodes(embeddings, idCol, vecCol, codebooks)
       .write.mode("overwrite").parquet(path)
-    val spark = embeddings.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path, PqMetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(
-      (s"""{"numSub":${codebooks.size},"subDim":${codebooks.head.head.length},""" +
-        s""""codesPerSub":${codebooks.head.size},"fp":"${pqFingerprint(codebooks)}"}""")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    StateDir.writeMeta(embeddings.sparkSession, path, StateDir.PqMeta,
+      "numSub" -> codebooks.size, "subDim" -> codebooks.head.head.length,
+      "codesPerSub" -> codebooks.head.size, "fp" -> pqFingerprint(codebooks))
   }
 
   /** Stored codebook fingerprint of a [[buildPqIndex]] table (None for
     * a pre-metadata table). */
   private def readPqFingerprint(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(indexPath, PqMetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverDirSwap(fs, indexPath)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val raw =
-        try new String(
-          org.apache.commons.io.IOUtils.toByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      """"fp"\s*:\s*"([0-9a-f]+)"""".r.findFirstMatchIn(raw).map(_.group(1))
-    }
-  }
+      indexPath: String): Option[String] =
+    StateDir.readMeta(spark, indexPath, StateDir.PqMeta)
+      .flatMap(_.get("fp")).collect { case fp: String => fp }
 
   /** Incremental maintenance for a [[buildPqIndex]] table: encode ONLY
     * the new vectors and append their packed code rows — the existing
@@ -1372,7 +1200,7 @@ object Similarity {
       autoCompactEvery: Int = 8): Unit = {
     val fp = readPqFingerprint(newEmbeddings.sparkSession, path)
       .getOrElse(throw new IllegalArgumentException(
-        s"no $PqMetaFile under $path — pre-metadata PQ tables cannot " +
+        s"no ${StateDir.PqMeta} under $path — pre-metadata PQ tables cannot " +
           "refresh (their codebook fingerprint is unknown); rebuild instead"))
     require(fp == pqFingerprint(codebooks),
       s"refreshPqIndex: codebooks do not match the index at $path " +

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.sources.ParquetState
+import graft.sources.{ParquetState, StateDir}
 
 /** Text analysis operators for training-data pipelines (EXTENSION,
   * SURVEY.md §2.K q_text_*). Everything is built from codegen'd
@@ -568,10 +568,24 @@ object TextAnalysis {
     * frame instead of re-deriving it per ranker. */
   private[operators] def docTermFreq(docs: DataFrame, idCol: String,
       textCol: String): DataFrame =
-    Parallelism.widen(docs, col(idCol))
-      .select(col(idCol).as("doc_id"),
+    termFreq(Parallelism.widen(docs, col(idCol)), idCol, textCol)
+
+  /** [[docTermFreq]] without the widening — for batch-sized inputs
+    * (an index refresh), where a widening shuffle would cost more than
+    * the tokenize it spreads. */
+  private def termFreq(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame =
+    docs.select(col(idCol).as("doc_id"),
         explode(tokens(lower(col(textCol)))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+
+  /** (doc_id, dl): document lengths, summed from a tf frame. */
+  private def docLengths(tf: DataFrame): DataFrame =
+    tf.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
+
+  /** The postings bucket of `term` in an `nBuckets` text index. */
+  private def termBucket(nBuckets: Int): Column =
+    pmod(xxhash64(col("term")), lit(nBuckets.toLong)).cast("int")
 
   /** [[bm25TopDocs]] from a pre-built [[docTermFreq]] frame — identical
     * math and output; callers that run several rankers over one corpus
@@ -580,7 +594,7 @@ object TextAnalysis {
   private[operators] def bm25TopDocsFromTf(tf: DataFrame,
       nTerms: Int, minTermLen: Int, k1: Double,
       b: Double, topK: Int): DataFrame = {
-    val dl = tf.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
+    val dl = docLengths(tf)
     val dft = tf.groupBy("term").agg(count(lit(1)).as("df"))
     // corpus constants from the docs that HAVE tokens (empty docs can't
     // match any term; excluding them keeps N/avgdl self-consistent)
@@ -588,10 +602,20 @@ object TextAnalysis {
     val probes = dft.filter(length(col("term")) >= minTermLen)
       .orderBy(col("df").desc, col("term"))
       .limit(nTerms) // TakeOrdered: an nTerms-row frame, broadcast below
-    val scored = tf
+    val hits = tf
       .join(broadcast(probes), Seq("term"))
       .join(dl, Seq("doc_id"))
       .crossJoin(broadcast(consts))
+    bm25Top(hits, k1, b, topK)
+  }
+
+  /** The BM25 tail both forms share: `hits` holds one row per posting of
+    * a probe term — (doc_id, term, tf, dl) with the term's df and the
+    * corpus constants (n_docs, sum_dl) — and each term keeps its `topK`
+    * best-scoring docs as (term, rk, doc_id, score). */
+  private def bm25Top(hits: DataFrame, k1: Double, b: Double,
+      topK: Int): DataFrame =
+    hits
       .withColumn("idf",
         log(lit(1.0) + (col("n_docs").cast("double") - col("df") + lit(0.5)) /
           (col("df").cast("double") + lit(0.5))))
@@ -600,15 +624,12 @@ object TextAnalysis {
           (col("tf").cast("double") + lit(k1) *
             (lit(1.0 - b) + lit(b) * col("dl").cast("double") *
               (col("n_docs").cast("double") / col("sum_dl").cast("double")))))
-    scored.groupBy("term")
+      .groupBy("term")
       .agg(graft.functions.SketchAggregates.topKAgg(
         col("score"), col("doc_id"), topK).as("top"))
       .select(col("term"), posexplode(col("top")))
       .select(col("term"), (col("pos") + 1).cast("long").as("rk"),
         col("col.id").as("doc_id"), round(col("col.score"), 6).as("score"))
-  }
-
-  private final val TextIndexMetaFile = "_text_index_meta.json"
 
   /** Persisted inverted index for BM25 probing — the LEXICAL member of
     * the materialized-index family (buildLshIndex / buildIvfIndex /
@@ -632,12 +653,9 @@ object TextAnalysis {
   def buildTextIndex(docs: DataFrame, idCol: String, textCol: String,
       path: String, nBuckets: Int = 64): Unit = {
     require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
-    val toks = Parallelism.widen(docs, col(idCol))
-      .select(col(idCol).as("doc_id"),
-        explode(tokens(lower(col(textCol)))).as("term"))
-    val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    val dl = tf.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
-    val bucket = pmod(xxhash64(col("term")), lit(nBuckets.toLong)).cast("int")
+    val tf = docTermFreq(docs, idCol, textCol)
+    val dl = docLengths(tf)
+    val bucket = termBucket(nBuckets)
     tf.join(dl, Seq("doc_id"))
       .withColumn("bucket", bucket)
       .repartition(col("bucket"))
@@ -647,31 +665,27 @@ object TextAnalysis {
       .write.mode("overwrite").parquet(s"$path/terms")
     dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
       .coalesce(1).write.mode("overwrite").parquet(s"$path/consts")
-    val p = new org.apache.hadoop.fs.Path(path, TextIndexMetaFile)
-    val fs = p.getFileSystem(docs.sparkSession.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    out.write(s"""{"nBuckets": $nBuckets, "tokenizer": "ws-lower"}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
+    StateDir.writeMeta(docs.sparkSession, path, StateDir.TextMeta,
+      "nBuckets" -> nBuckets, "tokenizer" -> Tokenizer)
   }
 
-  /** Read + validate the `_text_index_meta.json` of a [[buildTextIndex]]
-    * layout (shared by probe and refresh — both must fail loudly on a
-    * foreign tokenizer or a non-index path). */
-  private def readTextIndexMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String): String = {
-    val metaPath = new org.apache.hadoop.fs.Path(path, TextIndexMetaFile)
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // finish a compaction swap a crash interrupted (see compactTextIndex)
-    Similarity.recoverDirSwap(fs, path)
-    require(fs.exists(metaPath), s"no $TextIndexMetaFile under $path — not a text index")
-    val metaJson = {
-      val in = fs.open(metaPath)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    }
-    require(metaJson.contains("\"tokenizer\": \"ws-lower\""),
-      s"text index at $path was built with a different tokenizer: $metaJson")
-    metaJson
+  /** The tokenizer tag a text index records: lower-cased, split on
+    * whitespace ([[tokens]]). */
+  private final val Tokenizer = "ws-lower"
+
+  /** Read + validate the sidecar of a [[buildTextIndex]] layout, and
+    * return its bucket count (shared by probe, refresh, delete and
+    * compaction — all must fail loudly on a foreign tokenizer or a
+    * non-index path). Finishes a compaction swap a crash interrupted. */
+  private def textIndexBuckets(spark: org.apache.spark.sql.SparkSession,
+      path: String): Int = {
+    val found = StateDir.readMeta(spark, path, StateDir.TextMeta)
+    require(found.isDefined, s"no ${StateDir.TextMeta} under $path — not a text index")
+    val meta = found.get
+    require(meta.get("tokenizer").contains(Tokenizer),
+      s"text index at $path was built with a different tokenizer: $meta")
+    meta.get("nBuckets").collect { case n: Long => n.toInt }.getOrElse(
+      throw new IllegalArgumentException(s"text index meta at $path has no nBuckets: $meta"))
   }
 
   /** Incremental maintenance for a [[buildTextIndex]] layout — the
@@ -700,11 +714,7 @@ object TextAnalysis {
   def refreshTextIndex(newDocs: DataFrame, idCol: String, textCol: String,
       path: String, checkDisjoint: Boolean = false): Unit = {
     val spark = newDocs.sparkSession
-    val metaJson = readTextIndexMeta(spark, path)
-    val nBuckets = """"nBuckets":\s*(\d+)""".r.findFirstMatchIn(metaJson)
-      .map(_.group(1).toInt)
-      .getOrElse(throw new IllegalArgumentException(
-        s"text index meta at $path has no nBuckets: $metaJson"))
+    val nBuckets = textIndexBuckets(spark, path)
     if (checkDisjoint) {
       val overlap = ParquetState.read(spark, s"$path/postings")
         .select(col("doc_id")).distinct()
@@ -714,11 +724,9 @@ object TextAnalysis {
         s"$overlap of the new doc ids are already indexed at $path — " +
           "refresh requires disjoint ids (rebuild instead)")
     }
-    val toks = newDocs.select(col(idCol).as("doc_id"),
-      explode(tokens(lower(col(textCol)))).as("term"))
-    val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    val dl = tf.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
-    val bucket = pmod(xxhash64(col("term")), lit(nBuckets.toLong)).cast("int")
+    val tf = termFreq(newDocs, idCol, textCol)
+    val dl = docLengths(tf)
+    val bucket = termBucket(nBuckets)
     // shared stage: tf feeds the postings write, the df merge AND (via
     // dl) the consts delta — persist once, not three tokenizations
     tf.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -760,10 +768,12 @@ object TextAnalysis {
     * tombstone index accepts; compaction restores exact stats. */
   def deleteFromTextIndex(docIds: DataFrame, idCol: String,
       path: String): Unit = {
-    readTextIndexMeta(docIds.sparkSession, path)
+    textIndexBuckets(docIds.sparkSession, path)
     docIds.select(col(idCol).as("doc_id")).distinct()
-      .write.mode("append").parquet(s"$path/tombstones")
+      .write.mode("append").parquet(s"$path/$TextTombstoneDir")
   }
+
+  private final val TextTombstoneDir = "tombstones"
 
   /** Fold tombstones in and rewrite the index — the merge half of the
     * tombstone discipline. Everything rebuilds from the POSTINGS
@@ -773,22 +783,17 @@ object TextAnalysis {
     * built over the surviving documents (spec-pinned), and the
     * tombstone set is cleared. The whole rewritten index (postings,
     * terms, consts, meta) is staged under `${path}_compacting` and
-    * swapped in by [[Similarity.atomicDirSwap]] — the live index is
-    * never rewritten in place, and a crash anywhere is replayed by
-    * [[Similarity.recoverDirSwap]] at the next lifecycle entry. */
+    * swapped in by [[StateDir.swap]] — the live index is never
+    * rewritten in place, and a crash anywhere is replayed by
+    * [[StateDir.recover]] at the next lifecycle entry. */
   def compactTextIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
-    readTextIndexMeta(spark, path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    textIndexBuckets(spark, path)
+    val fs = StateDir.fs(spark, path)
     val staging = s"${path}_compacting"
     fs.delete(new org.apache.hadoop.fs.Path(staging), true) // a crashed run's leftovers
-    val tombPath = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val postings = ParquetState.read(spark, s"$path/postings")
-    val surviving =
-      if (!fs.exists(tombPath)) postings
-      else postings.join(ParquetState.read(spark, s"$path/tombstones"),
-        Seq("doc_id"), "left_anti")
+    val surviving = StateDir.withoutTombstones(spark,
+      ParquetState.read(spark, s"$path/postings"), path, TextTombstoneDir, "doc_id")
     // bucket is read back as a partition column — reuse it verbatim
     surviving.repartition(col("bucket"))
       .write.mode("overwrite").partitionBy("bucket")
@@ -799,15 +804,12 @@ object TextAnalysis {
     compacted.groupBy("term")
       .agg(count(lit(1)).as("df"), first(bucket).as("bucket"))
       .write.mode("overwrite").parquet(s"$staging/terms")
-    compacted.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
+    docLengths(compacted)
       .agg(count(lit(1)).as("n_docs"), coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
       .coalesce(1).write.mode("overwrite").parquet(s"$staging/consts")
-    org.apache.hadoop.fs.FileUtil.copy(fs,
-      new org.apache.hadoop.fs.Path(path, TextIndexMetaFile), fs,
-      new org.apache.hadoop.fs.Path(staging, TextIndexMetaFile),
-      false, spark.sparkContext.hadoopConfiguration)
+    StateDir.copySidecars(spark, path, staging)
     // the staged copy carries no tombstones: the swap clears them
-    Similarity.atomicDirSwap(fs, path, staging, "compactTextIndex")
+    StateDir.swap(fs, path, staging, "compactTextIndex")
   }
 
   /** BM25 probe against a [[buildTextIndex]] layout: probe terms are the
@@ -822,7 +824,7 @@ object TextAnalysis {
   def bm25TopDocsIndexed(spark: org.apache.spark.sql.SparkSession,
       path: String, nTerms: Int = 3, minTermLen: Int = 6, k1: Double = 1.2,
       b: Double = 0.75, topK: Int = 10): DataFrame = {
-    readTextIndexMeta(spark, path)
+    textIndexBuckets(spark, path)
 
     val probes = ParquetState.read(spark, s"$path/terms")
       .filter(length(col("term")) >= minTermLen)
@@ -838,32 +840,13 @@ object TextAnalysis {
           org.apache.spark.sql.types.StringType, nullable = false),
         org.apache.spark.sql.types.StructField("df",
           org.apache.spark.sql.types.LongType, nullable = false))))
-    val rawPostings = ParquetState.read(spark, s"$path/postings")
-      .filter(col("bucket").isin(buckets: _*))
-    val tombPath = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val tombFs = tombPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val postings =
-      if (!tombFs.exists(tombPath)) rawPostings
-      else rawPostings.join(ParquetState.read(spark, s"$path/tombstones"),
-        Seq("doc_id"), "left_anti")
-    val consts = ParquetState.read(spark, s"$path/consts")
-    val scored = postings
+    val postings = StateDir.withoutTombstones(spark,
+      ParquetState.read(spark, s"$path/postings").filter(col("bucket").isin(buckets: _*)),
+      path, TextTombstoneDir, "doc_id")
+    val hits = postings
       .join(broadcast(probeDf), Seq("term"))
-      .crossJoin(broadcast(consts))
-      .withColumn("idf",
-        log(lit(1.0) + (col("n_docs").cast("double") - col("df") + lit(0.5)) /
-          (col("df").cast("double") + lit(0.5))))
-      .withColumn("score",
-        col("idf") * (col("tf").cast("double") * lit(k1 + 1.0)) /
-          (col("tf").cast("double") + lit(k1) *
-            (lit(1.0 - b) + lit(b) * col("dl").cast("double") *
-              (col("n_docs").cast("double") / col("sum_dl").cast("double")))))
-    scored.groupBy("term")
-      .agg(graft.functions.SketchAggregates.topKAgg(
-        col("score"), col("doc_id"), topK).as("top"))
-      .select(col("term"), posexplode(col("top")))
-      .select(col("term"), (col("pos") + 1).cast("long").as("rk"),
-        col("col.id").as("doc_id"), round(col("col.score"), 6).as("score"))
+      .crossJoin(broadcast(ParquetState.read(spark, s"$path/consts")))
+    bm25Top(hits, k1, b, topK)
   }
 
   /** Rolling-hash (Rabin–Karp base-31 mod 2^61-1) fingerprint over tokens —

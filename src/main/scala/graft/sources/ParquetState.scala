@@ -69,18 +69,19 @@ object ParquetState {
     * driver-side footer read; None when there is no committed file or
     * its footer carries no Spark schema. */
   def schema(spark: SparkSession, path: String): Option[StructType] =
-    committedParquet(spark, path).nextOption().flatMap { f =>
-      scala.util.Try {
-        val reader = ParquetFileReader.open(
-          HadoopInputFile.fromPath(f, spark.sparkContext.hadoopConfiguration),
-          FooterOnly)
-        try Option(reader.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))
-        finally reader.close()
-      }.toOption.flatten.flatMap(json =>
-        scala.util.Try(DataType.fromJson(json)).toOption.collect {
-          case s: StructType => s
-        })
-    }
+    committedParquet(spark, path).nextOption().flatMap(footerSchema(spark, _))
+
+  private def footerSchema(spark: SparkSession, file: Path): Option[StructType] =
+    scala.util.Try {
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration),
+        FooterOnly)
+      try Option(reader.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))
+      finally reader.close()
+    }.toOption.flatten.flatMap(json =>
+      scala.util.Try(DataType.fromJson(json)).toOption.collect {
+        case s: StructType => s
+      })
 
   /** A reader carrying the footer schema of `schemaPath` when it has one,
     * for reads that need options of their own (e.g. `basePath`). */
@@ -91,4 +92,21 @@ object ParquetState {
     * schema comes from the first path. */
   def read(spark: SparkSession, paths: String*): DataFrame =
     paths.headOption.fold(spark.read)(reader(spark, _)).parquet(paths: _*)
+
+  /** An unpartitioned side segment of a layout (an ANN `_delta` or a
+    * tombstone set), read from its committed files; None when it holds
+    * none. The one walk yields both the footer schema and the read's
+    * roots, so no `_`-named dir reaches Spark (which would log "All
+    * paths were ignored" for it) and no listing is added. Past Spark's
+    * parallel-discovery threshold the roots would be listed by a Spark
+    * job, so a segment that many files wide is handed over as its dir. */
+  def readSegment(spark: SparkSession, dir: String): Option[DataFrame] = {
+    val files = committedParquet(spark, dir).toSeq
+    files.headOption.map { first =>
+      val threshold =
+        spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
+      val roots = if (files.size > threshold) Seq(dir) else files.map(_.toString)
+      footerSchema(spark, first).fold(spark.read)(spark.read.schema(_)).parquet(roots: _*)
+    }
+  }
 }

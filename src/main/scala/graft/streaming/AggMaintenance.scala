@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.IncrementalAgg
+import graft.sources.StateDir
 
 /** Streaming materialized-view maintenance — the streaming twin of
   * [[graft.operators.IncrementalAgg]] (the [[CorpusIngest]] discipline
@@ -43,7 +44,7 @@ object AggMaintenance {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val delta = IncrementalAgg.state(batch, keys, measures)
         val merged =
-          if (StateDirs.hasParquetData(spark, stateDir))
+          if (StateDir.hasParquetData(spark, stateDir))
             IncrementalAgg.merge(keys, measures,
               spark.read.parquet(stateDir), delta)
           else delta

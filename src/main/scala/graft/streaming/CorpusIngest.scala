@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.md5
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.Dedup
-import graft.sources.ParquetState
+import graft.sources.{ParquetState, StateDir}
 
 /** Streaming corpus ingestion with per-micro-batch incremental dedup
   * (EXTENSION, SURVEY §2.J×§2.K): new document files stream in, each
@@ -67,12 +67,12 @@ object CorpusIngest {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (hashIndex && !hashBackfillDone) {
-          if (StateDirs.hasParquetData(spark, corpusDir)) {
+          if (StateDir.hasParquetData(spark, corpusDir)) {
             val corpusHashes = ParquetState.read(spark, corpusDir)
               .select(md5(org.apache.spark.sql.functions.col(textCol))
                 .as("corpus_content_hash"))
             val missing =
-              if (StateDirs.hasParquetData(spark, hashDir))
+              if (StateDir.hasParquetData(spark, hashDir))
                 corpusHashes.join(ParquetState.read(spark, hashDir),
                   Seq("corpus_content_hash"), "left_anti")
               else corpusHashes
@@ -84,12 +84,12 @@ object CorpusIngest {
         }
         val fresh = Dedup.exactDedup(batch, idCol, textCol)
         val survivors =
-          if (!StateDirs.hasParquetData(spark, corpusDir)) fresh
+          if (!StateDir.hasParquetData(spark, corpusDir)) fresh
           else nearDupThreshold match {
             case Some(t) =>
               Dedup.dedupAgainstCorpus(fresh, ParquetState.read(spark, corpusDir),
                 idCol, textCol, threshold = t)
-            case None if hashIndex && StateDirs.hasParquetData(spark, hashDir) =>
+            case None if hashIndex && StateDir.hasParquetData(spark, hashDir) =>
               Dedup.exactAgainstHashes(fresh, ParquetState.read(spark, hashDir), textCol)
             case None =>
               Dedup.exactAgainstCorpus(fresh, ParquetState.read(spark, corpusDir), textCol)
@@ -148,7 +148,7 @@ object CorpusIngest {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val fresh = Dedup.exactDedup(batch, idCol, textCol)
         val survivors =
-          if (!StateDirs.hasParquetData(spark, corpusDir)) fresh
+          if (!StateDir.hasParquetData(spark, corpusDir)) fresh
           else Dedup.exactAgainstCorpus(fresh, ParquetState.read(spark, corpusDir), textCol)
         // localCheckpoint — NOT persist: the corpus append below calls
         // refreshByPath(corpusDir), which UNCACHES any cached plan whose
@@ -164,7 +164,7 @@ object CorpusIngest {
           // a wrong "absent" here sends the batch down the
           // buildTextIndex branch — whose mode("overwrite") silently
           // replaces the index with one covering only that batch
-          if (indexExists(spark, indexDir, "_text_index_meta.json"))
+          if (StateDir.hasMeta(spark, indexDir, StateDir.TextMeta))
             graft.operators.TextAnalysis.refreshTextIndex(
               pinned, idCol, textCol, indexDir)
           else
@@ -218,8 +218,8 @@ object CorpusIngest {
     import graft.operators.Similarity
     val srcSchema = schema.getOrElse(spark.read.parquet(sourceDir).schema)
     val metaFile = index match {
-      case _: IvfIngest => "_ivf_index_meta.json"
-      case _: LshIngest => "_lsh_index_meta.json"
+      case _: IvfIngest => StateDir.IvfMeta
+      case _: LshIngest => StateDir.LshMeta
     }
     spark.readStream
       .schema(srcSchema)
@@ -231,7 +231,7 @@ object CorpusIngest {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val fresh = batch.dropDuplicates(idCol)
         val survivors =
-          if (!StateDirs.hasParquetData(spark, corpusDir)) fresh
+          if (!StateDir.hasParquetData(spark, corpusDir)) fresh
           else fresh.join(
             ParquetState.read(spark, corpusDir)
               .select(org.apache.spark.sql.functions.col(idCol)),
@@ -239,7 +239,7 @@ object CorpusIngest {
         val pinned = survivors.localCheckpoint()
         if (pinned.count() > 0) {
           pinned.write.mode("append").parquet(corpusDir)
-          val exists = indexExists(spark, indexPath, metaFile)
+          val exists = StateDir.hasMeta(spark, indexPath, metaFile)
           index match {
             case IvfIngest(k, iters) =>
               if (exists)
@@ -322,7 +322,7 @@ object CorpusIngest {
             Seq("doc_id"), "left")
           .localCheckpoint()
         val survivorIds =
-          if (!StateDirs.hasParquetData(spark, sigsDir)) sigsNew.select("doc_id")
+          if (!StateDir.hasParquetData(spark, sigsDir)) sigsNew.select("doc_id")
           else {
             val sigIdx = ParquetState.read(spark, sigsDir)
             val exactIds = sigsNew.join(
@@ -330,7 +330,7 @@ object CorpusIngest {
               .select("doc_id")
             // a corpus of only too-short-to-shingle docs has sigs but no
             // bands yet — nothing to band-probe against
-            if (!StateDirs.hasParquetData(spark, bandsDir)) exactIds
+            if (!StateDir.hasParquetData(spark, bandsDir)) exactIds
             else {
             val bandsNew = Dedup.minHashBands(
               sigsNew.join(exactIds, Seq("doc_id"))
@@ -370,20 +370,4 @@ object CorpusIngest {
       }
       .start()
   }
-
-  /** Build-vs-refresh probe of an index dir: does its meta file exist?
-    * A compaction swap a crash interrupted is finished first
-    * ([[graft.operators.Similarity.recoverDirSwap]]) — in the crash state
-    * where the live dir is moved aside, a bare probe reads "absent" and
-    * the batch would BUILD an index over itself alone. Hadoop FileSystem
-    * calls, not java.io: a File check reports "absent" for hdfs:// /
-    * s3a:// / file: URIs. */
-  private def indexExists(spark: SparkSession, indexDir: String,
-      metaFile: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.operators.Similarity.recoverDirSwap(fs, indexDir)
-    fs.exists(new org.apache.hadoop.fs.Path(p, metaFile))
-  }
-
 }

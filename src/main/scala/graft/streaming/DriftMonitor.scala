@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.Profiling
+import graft.sources.StateDir
 
 /** Streaming distribution-drift monitor — the continuous twin of
   * [[graft.operators.Profiling.ksTwoSample]]: a REFERENCE population is
@@ -39,7 +40,7 @@ object DriftMonitor {
       maxFilesPerTrigger: Int = 1): StreamingQuery = {
     val srcSchema = schema.getOrElse(spark.read.parquet(sourceDir).schema)
     val refDir = s"$outDir/_reference_hist"
-    if (!StateDirs.hasParquetData(spark, refDir))
+    if (!StateDir.hasParquetData(spark, refDir))
       Profiling.valueHistogram(reference, valueCol)
         .write.mode("overwrite").parquet(refDir)
     spark.readStream

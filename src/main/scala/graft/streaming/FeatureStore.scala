@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.sources.StateDir
 
 /** Streaming feature-store maintenance — the ONLINE twin of the batch
   * point-in-time join ([[graft.operators.AsOfJoin.pointInTimeFeatures]],
@@ -67,7 +68,7 @@ object FeatureStore {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val delta = latestState(batch, keys, tsCol, valueCols)
         val merged =
-          if (StateDirs.hasParquetData(spark, stateDir))
+          if (StateDir.hasParquetData(spark, stateDir))
             latestState(
               spark.read.parquet(stateDir).unionByName(delta),
               keys, tsCol, valueCols)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.IncrementalJoin
+import graft.sources.StateDir
 
 /** Streaming JOIN-view maintenance — the streaming twin of
   * [[graft.operators.IncrementalJoin]], completing the maintenance
@@ -81,7 +82,7 @@ object JoinMaintenance {
       aggStateDir: String, aggKeys: Seq[String], aggMeasures: Seq[String],
       batchId: Long, batchSig: Long): Unit = {
     import graft.operators.IncrementalAgg
-    val exists = StateDirs.hasParquetData(spark, aggStateDir)
+    val exists = StateDir.hasParquetData(spark, aggStateDir)
     val prevRaw = if (exists) spark.read.parquet(aggStateDir) else null
     val recorded =
       if (!exists) None
@@ -142,7 +143,7 @@ object JoinMaintenance {
     // both deltas, exactly the ChangeCapture decomposition
     val aDel = batch.filter(col(opCol) =!= "I").select(col(aKey))
     val view =
-      if (StateDirs.hasParquetData(spark, viewDir)) spark.read.parquet(viewDir)
+      if (StateDir.hasParquetData(spark, viewDir)) spark.read.parquet(viewDir)
       else if (leftJoin) IncrementalJoin.joinStateLeft(aIns.limit(0), b, joinKeys)
       else IncrementalJoin.joinState(aIns.limit(0), b, joinKeys)
     def fold(f: (DataFrame, String, String, Seq[String], DataFrame,
@@ -197,7 +198,7 @@ object JoinMaintenance {
       maxFilesPerTrigger: Int = 1, leftJoin: Boolean = false,
       aggStateDir: Option[String] = None, aggKeys: Seq[String] = Nil,
       aggMeasures: Seq[String] = Nil): StreamingQuery = {
-    require(schema.nonEmpty || StateDirs.hasParquetData(spark, cdcDir),
+    require(schema.nonEmpty || StateDir.hasParquetData(spark, cdcDir),
       s"maintainJoinView: $cdcDir has no parquet yet — pass schema= to " +
         "start the maintenance query ahead of the CDC producer")
     require(aggStateDir.isEmpty || (aggKeys.nonEmpty && aggMeasures.nonEmpty),
@@ -291,14 +292,14 @@ object JoinMaintenance {
     // B′ first: remove the batch's touched B keys, add the inserts —
     // touched-before-add makes a torn-trigger replay idempotent
     val bPrev =
-      if (StateDirs.hasParquetData(spark, bStateDir))
+      if (StateDir.hasParquetData(spark, bStateDir))
         spark.read.parquet(bStateDir)
       else spark.read.parquet(bInitDir)
     val bTouched = bDel.unionByName(bIns.select(col(bKey))).distinct()
     val bNew = bPrev.join(bTouched, Seq(bKey), "left_anti")
       .unionByName(bIns).localCheckpoint()
     val view =
-      if (StateDirs.hasParquetData(spark, viewDir)) spark.read.parquet(viewDir)
+      if (StateDir.hasParquetData(spark, viewDir)) spark.read.parquet(viewDir)
       else if (leftJoin) IncrementalJoin.joinStateLeft(aIns.limit(0), bPrev, joinKeys)
       else IncrementalJoin.joinState(aIns.limit(0), bPrev, joinKeys)
     // A′ from the left view's own A-slice + the batch's A ops (on a
@@ -349,7 +350,7 @@ object JoinMaintenance {
     val aIns = batch.filter(col(opCol) =!= "D").drop(opCol)
     val aDel = batch.filter(col(opCol) =!= "I").select(col(aKey))
     val v1 =
-      if (StateDirs.hasParquetData(spark, v1Dir)) spark.read.parquet(v1Dir)
+      if (StateDir.hasParquetData(spark, v1Dir)) spark.read.parquet(v1Dir)
       else if (leftJoin) IncrementalJoin.joinStateLeft(aIns.limit(0), b, joinKeysAB)
       else IncrementalJoin.joinState(aIns.limit(0), b, joinKeysAB)
     // level 1: fold the batch and surface V1's own changeset. LEFT mode:
@@ -367,7 +368,7 @@ object JoinMaintenance {
     // row key rides as a struct column, the A snapshot is the pinned V1′
     val abKey = struct(col(aKey), col(bKey)).as("__ab_key")
     val v2 =
-      if (StateDirs.hasParquetData(spark, v2Dir)) spark.read.parquet(v2Dir)
+      if (StateDir.hasParquetData(spark, v2Dir)) spark.read.parquet(v2Dir)
       else IncrementalJoin.joinState(v1.select(abKey, col("*")), c, joinKeysC)
     val vd2 = IncrementalJoin.applyCdcWithDelta(v2, "__ab_key", cKey,
       joinKeysC,
@@ -422,7 +423,7 @@ object JoinMaintenance {
       maxFilesPerTrigger: Int = 1, aggStateDir: Option[String] = None,
       aggKeys: Seq[String] = Nil, aggMeasures: Seq[String] = Nil,
       leftJoin: Boolean = false): StreamingQuery = {
-    require(schema.nonEmpty || StateDirs.hasParquetData(spark, cdcDir),
+    require(schema.nonEmpty || StateDir.hasParquetData(spark, cdcDir),
       s"maintainSnowflakeView: $cdcDir has no parquet yet — pass schema= " +
         "to start the maintenance query ahead of the CDC producer")
     require(aggStateDir.isEmpty || (aggKeys.nonEmpty && aggMeasures.nonEmpty),
@@ -455,7 +456,7 @@ object JoinMaintenance {
       maxFilesPerTrigger: Int = 1, leftJoin: Boolean = false,
       aggStateDir: Option[String] = None, aggKeys: Seq[String] = Nil,
       aggMeasures: Seq[String] = Nil): StreamingQuery = {
-    require(schema.nonEmpty || StateDirs.hasParquetData(spark, cdcDir),
+    require(schema.nonEmpty || StateDir.hasParquetData(spark, cdcDir),
       s"maintainJoinViewTwoSided: $cdcDir has no parquet yet — pass " +
         "schema= to start the maintenance query ahead of the CDC producer")
     require(aggStateDir.isEmpty || (aggKeys.nonEmpty && aggMeasures.nonEmpty),
@@ -535,7 +536,7 @@ object JoinMaintenance {
     // rejects B inserts — the level-2 fold's "A snapshot" is the
     // MATERIALIZED V1′, so the reconstruction problem does not exist here
     val cPrev =
-      if (cStateDir.exists(d => StateDirs.hasParquetData(spark, d)))
+      if (cStateDir.exists(d => StateDir.hasParquetData(spark, d)))
         spark.read.parquet(cStateDir.get)
       else spark.read.parquet(cDir)
     val (cIns, cDel, cNew) =
@@ -550,14 +551,14 @@ object JoinMaintenance {
     // B′ from the batch (touched-before-add, replay-idempotent); the
     // fold consumes it, the write lands LAST — see the order note below
     val bPrev =
-      if (StateDirs.hasParquetData(spark, bStateDir))
+      if (StateDir.hasParquetData(spark, bStateDir))
         spark.read.parquet(bStateDir)
       else spark.read.parquet(bInitDir)
     val bTouched = bDel.unionByName(bIns.select(col(bKey))).distinct()
     val bNew = bPrev.join(bTouched, Seq(bKey), "left_anti")
       .unionByName(bIns).localCheckpoint()
     val v1 =
-      if (StateDirs.hasParquetData(spark, v1Dir)) spark.read.parquet(v1Dir)
+      if (StateDir.hasParquetData(spark, v1Dir)) spark.read.parquet(v1Dir)
       else if (leftJoin) IncrementalJoin.joinStateLeft(aIns.limit(0), bPrev, joinKeysAB)
       else IncrementalJoin.joinState(aIns.limit(0), bPrev, joinKeysAB)
     // A′ from the left view's own A-slice + the batch's A ops (identical
@@ -585,7 +586,7 @@ object JoinMaintenance {
     // empty unless cStateDir opted C into the log
     val abKey = struct(col(aKey), col(bKey)).as("__ab_key")
     val v2 =
-      if (StateDirs.hasParquetData(spark, v2Dir)) spark.read.parquet(v2Dir)
+      if (StateDir.hasParquetData(spark, v2Dir)) spark.read.parquet(v2Dir)
       else IncrementalJoin.joinState(v1.select(abKey, col("*")), cPrev, joinKeysC)
     val vd2 = IncrementalJoin.applyCdcWithDelta(v2, "__ab_key", cKey,
       joinKeysC,
@@ -653,7 +654,7 @@ object JoinMaintenance {
       aggStateDir: Option[String] = None, aggKeys: Seq[String] = Nil,
       aggMeasures: Seq[String] = Nil,
       cStateDir: Option[String] = None): StreamingQuery = {
-    require(schema.nonEmpty || StateDirs.hasParquetData(spark, cdcDir),
+    require(schema.nonEmpty || StateDir.hasParquetData(spark, cdcDir),
       s"maintainSnowflakeViewTwoSided: $cdcDir has no parquet yet — pass " +
         "schema= to start the maintenance query ahead of the CDC producer")
     require(aggStateDir.isEmpty || (aggKeys.nonEmpty && aggMeasures.nonEmpty),

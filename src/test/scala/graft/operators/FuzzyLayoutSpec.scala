@@ -493,6 +493,33 @@ class FuzzyLayoutSpec extends SparkTestBase {
       "tiny table compacts to the plan's single bin")
   }
 
+  test("compactFiles / zorderCluster: a crash between the swap's two renames loses no table") {
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    val dir = java.nio.file.Files.createTempDirectory("cfx").toString
+    val root = s"$dir/t"
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(root).getFileSystem(conf)
+    spark.range(1000).select(col("id"), (col("id") % 7).as("v"),
+        pmod(hash(col("id")), lit(64)).as("x"), pmod(hash(col("id") + 7), lit(64)).as("y"))
+      .repartition(10).write.parquet(root)
+    val before = spark.read.parquet(root).orderBy("id").collect().toSeq
+    // the compacted staging copy, made from a twin of the table
+    FileUtil.copy(fs, new Path(root), fs, new Path(s"$dir/twin"), false, conf)
+    Layout.compactFiles(spark, s"$dir/twin", targetBytes = 1L << 20)
+    // crash after the first rename: staging complete, live moved aside
+    FileUtil.copy(fs, new Path(s"$dir/twin"), fs, new Path(s"${root}_compacting"), false, conf)
+    assert(fs.rename(new Path(root), new Path(s"${root}_preswap")))
+    Layout.compactFiles(spark, root, targetBytes = 1L << 20)
+    assert(spark.read.parquet(root).orderBy("id").collect().toSeq == before)
+    assert(!fs.exists(new Path(s"${root}_preswap")) && !fs.exists(new Path(s"${root}_compacting")))
+    // the same crash with no staged copy left: the aside copy comes back
+    assert(fs.rename(new Path(root), new Path(s"${root}_preswap")))
+    Layout.zorderCluster(spark, root,
+      t => Layout.zorderKey(t("x"), t("y"), 6), nFiles = 2)
+    assert(spark.read.parquet(root).orderBy("id").collect().toSeq == before)
+    assert(!fs.exists(new Path(s"${root}_preswap")))
+  }
+
   test("compactFiles on a Hive-partitioned input materializes partition columns, keeps rows (r8)") {
     val root = java.nio.file.Files.createTempDirectory("cfp").toString + "/t"
     spark.range(2000).select(col("id"), (col("id") % 3).as("p"))

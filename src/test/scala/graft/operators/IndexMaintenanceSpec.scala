@@ -88,7 +88,7 @@ class IndexMaintenanceSpec extends SparkTestBase {
     TextAnalysis.buildTextIndex(Tables.load(spark, sf(), "documents"),
       "doc_id", "text", text, nBuckets = 8)
     // (index dir, a probe entering the index's lifecycle) — both swap
-    // families share atomicDirSwap/recoverDirSwap
+    // families share StateDir.swap/recover
     val cases: Seq[(String, () => Seq[org.apache.spark.sql.Row])] = Seq(
       lsh -> (() => Similarity.lshTopKIndexed(spark, lsh, "vec_id",
         "embedding", vec, 10).collect().toSeq),

@@ -145,6 +145,58 @@ class ParquetStateSpec extends SparkTestBase {
     seen.asScala.toSeq
   }
 
+  /** Log messages at WARN and above that `body` produces. */
+  private def warningsOf(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("pqstate-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val rootLogger = ctx.getConfiguration.getRootLogger
+    rootLogger.addAppender(capture, Level.WARN, null)
+    ctx.updateLoggers()
+    try body
+    finally {
+      rootLogger.removeAppender(capture.getName)
+      ctx.updateLoggers()
+      capture.stop()
+    }
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq
+  }
+
+  test("reads of `_delta` and `_tombstones` segments log no ignored-paths warning") {
+    val probe = emb.filter(col("vec_id") === 7).head().getSeq[Float](1).toArray
+    val ignored = "All paths were ignored"
+    // the capture sees Spark's warning for a plain read of the segment dir
+    assert(warningsOf(spark.read.parquet(s"$ivfDelta/_delta"))
+      .exists(_.contains(ignored)), "the log capture must see the warning")
+    val tomb = s"$root/ivf_delta_tomb"
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(conf)
+    org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(ivfDelta), fs,
+      new org.apache.hadoop.fs.Path(tomb), false, conf)
+    import spark.implicits._
+    Similarity.deleteFromAnnIndex(Seq(3L, 160L).toDF("vec_id"), "vec_id", tomb)
+    Seq(ivfDelta, tomb).foreach { p =>
+      val warned = warningsOf {
+        Similarity.ivfTopKIndexed(spark, p, "vec_id", "embedding", centroids, probe, 10)
+          .collect()
+        Similarity.readAnnIndex(spark, p, "vec_id").collect()
+      }.filter(_.contains(ignored))
+      assert(warned.isEmpty, s"$p: ${warned.mkString("; ")}")
+    }
+    val visible = Similarity.readAnnIndex(spark, tomb, "vec_id").select("vec_id")
+      .as[Long].collect().toSet
+    assert(visible == emb.select("vec_id").as[Long].collect().toSet -- Set(3L, 160L))
+  }
+
   test("index probes run no schema-inference job") {
     // warm the fixtures outside the counted window
     Seq(textIdx, ivfMain, ivfDelta)
